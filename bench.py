@@ -8,6 +8,7 @@ Env:
   SPARK_GRAFT_CPUS     local[k]       (default 32)
   BENCH_ONLY           comma list of query names to run (default: headline set)
   BENCH_FIXTURE_DOCS   synthetic interleaved corpus size (default 20000)
+  SPARK_DRIVER_MEM     driver JVM heap (default 24g, capped at physical memory)
 
 Each query is forced with a noop-format write (materializes every column,
 no driver collect). Progress goes to stderr; stdout carries only the JSON.
@@ -62,6 +63,12 @@ HEADLINE = [
     "extract_fixture",
     "extract_joined",
 ]
+
+
+def default_driver_mem() -> str:
+    """24g, or the machine's physical memory in whole GiB if smaller."""
+    phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{min(24, phys_gib)}g"
 
 
 def log(msg: str) -> None:
@@ -248,7 +255,7 @@ def main() -> None:
 
     # local mode = one JVM for driver+executors; the joined-payload path
     # shuffles ~70KB payload rows, so give the JVM real headroom
-    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
+    os.environ.setdefault("SPARK_DRIVER_MEM", default_driver_mem())
     spark = get_spark("openocr-spark-bench", master=f"local[{cpus}]",
                       shuffle_partitions=max(cpus * 2, 16))
     spark.sparkContext.setLogLevel("ERROR")

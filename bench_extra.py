@@ -15,6 +15,7 @@ Env:
   BENCH_TRIALS        trials per query (default 3, reports min+median)
   BENCH_PLANS         if set, write <plans>/<query>_<tag>.txt explain output
   BENCH_TAG           plan file suffix (default "plan")
+  SPARK_DRIVER_MEM    driver JVM heap (default 24g, capped at physical memory)
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ import time
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
 
+from bench import default_driver_mem  # noqa: E402
 from openocr_spark.queries import SPARK_Q  # noqa: E402
 from openocr_spark.session import get_spark  # noqa: E402
 
@@ -47,7 +49,7 @@ def main() -> None:
         print("usage: bench_extra.py <query> [query ...]", file=sys.stderr)
         sys.exit(2)
 
-    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
+    os.environ.setdefault("SPARK_DRIVER_MEM", default_driver_mem())
     spark = get_spark(
         "openocr-spark-bench-extra",
         master=f"local[{cpus}]",

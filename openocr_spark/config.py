@@ -25,13 +25,6 @@ class ExtractConfig:
     unclip_ratio: float = 1.5
     drop_score: float = 0.5
     line_tol: int = 10
-    # distribution knobs (SURVEY.md §4 O5): the single salted repartition
-    # before the media kernels; None = 2 * spark.sparkContext.defaultParallelism
-    media_partitions: int | None = None
-    # shape-uniform kernel batches via a local ratio sort on the joined-
-    # payload path (costs a per-partition spill of payload bytes; enable
-    # when the recognition kernel pads batches to a common shape)
-    ratio_sort: bool = False
     # recognition decode head, selected by name like the reference's
     # PostProcess config (openrec/postprocess/__init__.py
     # build_post_process): ctc | nrtr | srn | gtc | ce | char | abinet |

@@ -171,25 +171,31 @@ def detect_boxes(
     return boxes, scores
 
 
-def sorted_boxes(boxes: list[np.ndarray], line_tol: int = 10) -> list[np.ndarray]:
-    """Reading order, bit-identical to tools/infer_e2e.py:54-75.
+def reading_order(boxes: list[np.ndarray], line_tol: int = 10) -> list[int]:
+    """Indices of `boxes` in reading order, bit-identical to
+    tools/infer_e2e.py:54-75 `sorted_boxes`.
 
     Sort by (y, x) of the top-left corner, then one adjacent-swap pass:
     for each i, bubble box i+1 leftwards while its y is within
     `line_tol` of the previous box's y and its x is smaller; stop at the
     first non-swap (the reference `break`s — NOT a full bubble sort).
+    Returned as a permutation so callers can carry per-box values
+    (detection scores) along with the boxes.
     """
-    out = sorted(boxes, key=lambda b: (b[0][1], b[0][0]))
+    out = sorted(range(len(boxes)), key=lambda i: (boxes[i][0][1], boxes[i][0][0]))
     for i in range(len(out) - 1):
         for j in range(i, -1, -1):
-            if (
-                abs(out[j + 1][0][1] - out[j][0][1]) < line_tol
-                and out[j + 1][0][0] < out[j][0][0]
-            ):
+            a, b = boxes[out[j]][0], boxes[out[j + 1]][0]
+            if abs(b[1] - a[1]) < line_tol and b[0] < a[0]:
                 out[j], out[j + 1] = out[j + 1], out[j]
             else:
                 break
     return out
+
+
+def sorted_boxes(boxes: list[np.ndarray], line_tol: int = 10) -> list[np.ndarray]:
+    """`boxes` in reading order (see `reading_order`)."""
+    return [boxes[i] for i in reading_order(boxes, line_tol)]
 
 
 def assign_regions_to_boxes(
@@ -201,8 +207,6 @@ def assign_regions_to_boxes(
     cropping pixels we look up the region's logits by position."""
     if not boxes or not region_points:
         return [-1] * len(boxes)
-    # region centers computed once (was per box x per region); points may
-    # arrive as object-dtype nested arrays from Arrow — index explicitly
     centers = np.array(
         [
             [

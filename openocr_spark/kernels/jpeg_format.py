@@ -1068,6 +1068,7 @@ def _next_marker(data: bytes, pos: int) -> int:
         if nxt != 0x00 and not (0xD0 <= nxt <= 0xD7):
             return pos
         pos += 2
+    return n
 
 
 def _alloc_coef_store(frame: dict) -> dict[int, np.ndarray]:

@@ -86,7 +86,11 @@ def minhash_signatures(
     ≥ n tokens have shingles, which the cheap pre-filter on the token
     count reproduces (split is evaluated once there and once in
     shingle_array — still strictly less work than the old shuffle).
-    Docs with duplicate-only shingles keep identical signatures."""
+    Docs with duplicate-only shingles keep identical signatures.
+
+    Precondition: `id_col` is unique. The per-row form gives one
+    signature per ROW, so two rows sharing an id yield two signature
+    rows for it (the grouped form merged their shingles into one)."""
     from openocr_spark.operators.partitioning import spread
 
     # spread BEFORE the hashing expressions: an unsplittable input (one

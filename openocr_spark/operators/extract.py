@@ -7,12 +7,13 @@ SURVEY §3.1-3.2 from tools/infer_e2e.py:220-402 / infer_doc_onnx.py:758-1028):
   → posexplode(spans)                                   [narrow]
   → split on kind:
       text  → boilerplate classifier (vectorized exprs) → keep clean
-      media → [optional join media_payloads on media_ref]
-            → repartition(P, media_ref)   ← THE one salted wide shuffle:
-              distributes media work uniformly regardless of how many
-              media spans a single document has (media-heavy skew tail,
-              SURVEY §4 O5)
-            → mapInPandas det+rec kernel (Arrow-batched; per-batch numpy)
+      media → join media_payloads on media_ref (joined payloads)
+              | repartition(P, media_ref) (synthesized payloads)
+              ← THE one salted wide shuffle: distributes media work
+              uniformly regardless of how many media spans a single
+              document has (media-heavy skew tail, SURVEY §4 O5)
+            → mapInArrow det+rec kernel (one body for both payload
+              modes; per-row numpy)
   → unionByName
   → groupBy(doc_id): collect → array_sort by offset → index ⇒ `order`
     [second shuffle, partitioned by doc_id]
@@ -32,10 +33,7 @@ Scale notes (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -44,7 +42,7 @@ from openocr_spark.config import DEFAULT_CONFIG, ExtractConfig
 from openocr_spark.kernels.detection import (
     assign_regions_to_boxes,
     detect_boxes,
-    sorted_boxes,
+    reading_order,
 )
 from openocr_spark.kernels.recognition import ctc_greedy_decode
 from openocr_spark.operators.boilerplate import is_boilerplate
@@ -66,17 +64,6 @@ TOKENIZER_HEADS = frozenset({"unirec", "cmer", "mgp_bpe", "mgp_wp"})
 # through a drop_score filter) — exempt from the score cut, else the
 # default drop_score would silently drop every decoded text
 NO_CONF_HEADS = frozenset({"unirec", "cmer"})
-
-
-def _argmax_ids_probs(logits: np.ndarray):
-    """Softmax argmax ids + their probabilities — the bridge from a
-    single-logits buffer to the token-id heads (the analog of the AR
-    loop's per-step argmax in tools/infer_unirec_onnx.py:288-331).
-    Thin alias of the kernel-side _argmax_conf so the two can never
-    diverge."""
-    from openocr_spark.kernels.decode_heads import _argmax_conf
-
-    return _argmax_conf(logits)
 
 
 def _ce_head(logits: np.ndarray):
@@ -139,15 +126,15 @@ def _decode_fn(name: str, token_map=None):
         id_to_token = dict(token_map)
         if name == "unirec":
             def tok_head(logits):  # noqa: ANN001
-                ids, _ = _argmax_ids_probs(logits)
+                ids, _ = H._argmax_conf(logits)
                 return H.unirec_decode(ids, id_to_token)
         elif name == "cmer":
             def tok_head(logits):  # noqa: ANN001
-                ids, _ = _argmax_ids_probs(logits)
+                ids, _ = H._argmax_conf(logits)
                 return H.cmer_decode(ids, id_to_token)
         elif name == "mgp_bpe":
             def tok_head(logits):  # noqa: ANN001
-                ids, probs = _argmax_ids_probs(logits)
+                ids, probs = H._argmax_conf(logits)
                 return H.mgp_bpe_decode(ids, probs, id_to_token)
         else:  # mgp_wp
             from openocr_spark.kernels.tokenizer import sep_id
@@ -155,7 +142,7 @@ def _decode_fn(name: str, token_map=None):
             sep = sep_id(tuple(id_to_token.items()))
 
             def tok_head(logits):  # noqa: ANN001
-                ids, probs = _argmax_ids_probs(logits)
+                ids, probs = H._argmax_conf(logits)
                 return H.mgp_wp_decode(ids, probs, id_to_token, sep_id=sep)
 
         return tok_head
@@ -178,35 +165,43 @@ REC_HEAD_NAMES: tuple[str, ...] = (
 )
 
 
-def _process_media_arrays(
-    prob: np.ndarray, regions: list[dict], cfg: ExtractConfig, decode=None
-) -> str:
-    """Per-media kernel flow: detect → reading order → recognize → filter
-    → newline-join (infer_e2e.py:155-218 infer_single_image analog).
-    `decode` is the resolved decode-head kernel — the batch kernels
-    resolve it ONCE at closure-build time (driver side, so a bad
-    cfg.rec_head fails before any job launches, and the hot loop skips
-    168k dispatch lookups); None resolves here for direct callers."""
-    if decode is None:
-        decode = _decode_fn(cfg.rec_head, cfg.token_map)
-    boxes, _scores = detect_boxes(
+def detect_in_reading_order(
+    prob: np.ndarray, regions: list[dict], cfg: ExtractConfig
+) -> tuple[list[np.ndarray], list[float], list[int]]:
+    """detect → reading order → region lookup, shared by the extraction
+    kernel and `metrics.extract_detail`: the detected boxes in reading
+    order, their detection scores, and per box the index of the region
+    whose logits it reads (-1 if none; the crop-step surrogate)."""
+    boxes, scores = detect_boxes(
         prob,
         thresh=cfg.binarize_thresh,
         box_thresh=cfg.box_thresh,
         min_size=cfg.min_size,
         unclip_ratio=cfg.unclip_ratio,
     )
-    boxes = sorted_boxes(boxes, line_tol=cfg.line_tol)
+    order = reading_order(boxes, line_tol=cfg.line_tol)
+    boxes = [boxes[i] for i in order]
     pts = [np.asarray(r["points"]) for r in regions]
+    return boxes, [scores[i] for i in order], assign_regions_to_boxes(boxes, pts)
+
+
+def _process_media_arrays(
+    prob: np.ndarray, regions: list[dict], cfg: ExtractConfig, decode=None
+) -> str:
+    """Per-media kernel flow: detect → reading order → recognize → filter
+    → newline-join (infer_e2e.py:155-218 infer_single_image analog).
+    `decode` is the resolved decode-head kernel — the batch kernel
+    resolves it ONCE at closure-build time (driver side, so a bad
+    cfg.rec_head fails before any job launches, and the hot loop skips
+    168k dispatch lookups); None resolves here for direct callers."""
+    if decode is None:
+        decode = _decode_fn(cfg.rec_head, cfg.token_map)
+    _, _, assigned = detect_in_reading_order(prob, regions, cfg)
     texts = []
-    for box, ridx in zip(boxes, assign_regions_to_boxes(boxes, pts)):
+    for ridx in assigned:
         if ridx < 0:
             continue
-        reg = regions[ridx]
-        logits = reg["logits"]
-        if isinstance(logits, (bytes, bytearray)):
-            logits = _logits_from_buffer(logits, int(reg["logits_t"]))
-        text, score = decode(logits)
+        text, score = decode(regions[ridx]["logits"])
         if score >= cfg.drop_score or cfg.rec_head in NO_CONF_HEADS:
             texts.append(text)
     return "\n".join(texts)
@@ -253,15 +248,50 @@ def _logits_from_buffer(buf, t: int) -> np.ndarray:
     )
 
 
-def _media_kernel_arrow(cfg: ExtractConfig):
-    """mapInArrow kernel for the joined-payload path.
+def _joined_payloads(batch):
+    """(prob, regions) per row of a batch joined with media_payloads.
 
     The payload columns are wide binary cells (~60KB score maps, logits);
-    a pandas kernel would materialize every cell as a Python bytes object
+    a pandas batch would materialize every cell as a Python bytes object
     (copy) and every region as a dict — measured 59s for an 11GB batch
-    stream where the actual decode work is ~2s. Arrow RecordBatches let
-    numpy wrap the buffers zero-copy (`scalar.as_buffer()`), so only the
-    small string/int columns are materialized."""
+    stream where the actual decode work is ~2s. numpy wraps the Arrow
+    buffers zero-copy (`scalar.as_buffer()`), so only the small int and
+    points columns are materialized."""
+    heights = batch.column("height").to_pylist()
+    widths = batch.column("width").to_pylist()
+    sm_col = batch.column("score_map")
+    regions_col = batch.column("regions")
+    for i in range(batch.num_rows):
+        prob = _prob_from_buffer(
+            sm_col[i].as_buffer(), int(heights[i]), int(widths[i])
+        )
+        regs = regions_col[i]
+        regions = []
+        for j in range(len(regs)):
+            r = regs[j]
+            logits = _logits_from_buffer(
+                r["logits"].as_buffer(), int(r["logits_t"].as_py())
+            )
+            regions.append({"points": r["points"].as_py(), "logits": logits})
+        yield prob, regions
+
+
+def _synthesized_payloads(batch):
+    """(prob, regions) per row, generated deterministically from
+    media_ref inside the executor (fixture path — distributes
+    generation, nothing crosses the driver)."""
+    from openocr_spark.fixtures import payload_for_media_ref
+
+    for ref in batch.column("media_ref").to_pylist():
+        p = payload_for_media_ref(ref)
+        yield p["score_map"], p["regions"]
+
+
+def _media_kernel(cfg: ExtractConfig, payloads):
+    """mapInArrow det+rec kernel, one body for both payload modes.
+    `payloads(batch)` yields (prob, regions) for each row of a batch
+    (`_joined_payloads` or `_synthesized_payloads`); the row keys pass
+    through as Arrow columns."""
 
     decode = _decode_fn(cfg.rec_head, cfg.token_map)  # driver-side fail-fast
 
@@ -269,87 +299,17 @@ def _media_kernel_arrow(cfg: ExtractConfig):
         import pyarrow as pa
 
         for batch in batches:
-            n = batch.num_rows
-            doc_ids = batch.column("doc_id").to_pylist()
-            offsets = batch.column("offset").to_pylist()
-            refs = batch.column("media_ref").to_pylist()
-            heights = batch.column("height").to_pylist()
-            widths = batch.column("width").to_pylist()
-            sm_col = batch.column("score_map")
-            regions_col = batch.column("regions")
-            out_text = []
-            for i in range(n):
-                prob = _prob_from_buffer(
-                    sm_col[i].as_buffer(), int(heights[i]), int(widths[i])
-                )
-                regs = regions_col[i]
-                regions = []
-                for j in range(len(regs)):
-                    r = regs[j]
-                    logits = _logits_from_buffer(
-                        r["logits"].as_buffer(), int(r["logits_t"].as_py())
-                    )
-                    regions.append(
-                        {"points": r["points"].as_py(), "logits": logits}
-                    )
-                out_text.append(
-                    _process_media_arrays(prob, regions, cfg, decode)
-                )
+            out_text = [
+                _process_media_arrays(prob, regions, cfg, decode)
+                for prob, regions in payloads(batch)
+            ]
             yield pa.RecordBatch.from_pydict(
                 {
-                    "doc_id": doc_ids,
-                    "offset": pa.array(
-                        [int(o) for o in offsets], type=pa.int32()
-                    ),
-                    "kind": ["media"] * n,
+                    "doc_id": batch.column("doc_id"),
+                    "offset": batch.column("offset"),
+                    "kind": ["media"] * batch.num_rows,
                     "text": out_text,
-                    "media_ref": refs,
-                }
-            )
-
-    return kernel
-
-
-def _media_kernel(cfg: ExtractConfig, synthesize: bool):
-    """mapInPandas kernel. If `synthesize`, payloads are generated
-    deterministically from media_ref inside the executor (fixture path —
-    distributes generation, nothing crosses the driver); otherwise the
-    payload columns come from the joined media_payloads table."""
-
-    decode = _decode_fn(cfg.rec_head, cfg.token_map)  # driver-side fail-fast
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from openocr_spark.fixtures import payload_for_media_ref
-
-        for pdf in batches:
-            out_text = []
-            # iterate materialized column lists, not .iloc — per-row
-            # pandas scalar indexing costs µs each and this loop runs
-            # once per media span (guide §1.2 per-task work)
-            if synthesize:
-                for ref in pdf["media_ref"].tolist():
-                    p = payload_for_media_ref(ref)
-                    out_text.append(
-                        _process_media_arrays(
-                            p["score_map"], p["regions"], cfg, decode
-                        )
-                    )
-            else:
-                for h, w, sm, regs in zip(
-                    pdf["height"].tolist(), pdf["width"].tolist(),
-                    pdf["score_map"], pdf["regions"],
-                ):
-                    prob = _prob_from_buffer(sm, int(h), int(w))
-                    out_text.append(
-                        _process_media_arrays(prob, list(regs), cfg, decode)
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "offset": pdf["offset"].astype("int32"),
-                    "kind": "media",
-                    "text": out_text,
-                    "media_ref": pdf["media_ref"],
+                    "media_ref": batch.column("media_ref"),
                 }
             )
 
@@ -397,7 +357,6 @@ def extract_flat(
     )
 
     media = spans.filter(F.col("kind") == "media").select("doc_id", "offset", "media_ref")
-    n_parts = cfg.media_partitions or 2 * spark.sparkContext.defaultParallelism
     if media_payloads is not None:
         # the equi-join on media_ref IS the salt on this path: its output
         # is distributed by media_ref (or by the payload table's own
@@ -407,27 +366,18 @@ def extract_flat(
         # bucket(N, media_ref) specs make this a storage-partitioned
         # join: the payload bytes never shuffle at all.
         media = media.join(media_payloads, "media_ref")
-        if cfg.ratio_sort:
-            # optional shape-uniform batching (RatioSampler analog,
-            # SURVEY O5): a local sort — costs a per-partition spill of
-            # payload bytes, only worth it when the kernel pads batches
-            media = media.sortWithinPartitions(
-                (F.col("width") / F.col("height")).alias("_ratio")
-            )
+        payloads = _joined_payloads
     else:
         # synthesize path carries only (doc_id, offset, media_ref): the
         # ONE salted wide shuffle distributing media work uniformly,
         # immune to media-heavy documents (media_ref is unique per span)
-        media = media.repartition(n_parts, "media_ref")
-    if media_payloads is not None:
-        # wide binary payload columns → Arrow-native kernel (zero-copy)
-        media_out = media.mapInArrow(
-            _media_kernel_arrow(cfg), schema=schemas.SPAN_ROW
-        ).select("doc_id", "offset", "kind", "text", "media_ref")
-    else:
-        media_out = media.mapInPandas(
-            _media_kernel(cfg, synthesize=True), schema=schemas.SPAN_ROW
-        ).select("doc_id", "offset", "kind", "text", "media_ref")
+        media = media.repartition(
+            2 * spark.sparkContext.defaultParallelism, "media_ref"
+        )
+        payloads = _synthesized_payloads
+    media_out = media.mapInArrow(
+        _media_kernel(cfg, payloads), schema=schemas.SPAN_ROW
+    )
 
     return non_media.unionByName(media_out)
 

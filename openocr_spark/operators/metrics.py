@@ -620,30 +620,19 @@ def extract_detail(
     payloads — the system_results.txt row shape
     (infer_e2e.py:272-276). Input: df with a media_ref column."""
     from openocr_spark.fixtures import payload_for_media_ref
-    from openocr_spark.kernels.detection import (
-        assign_regions_to_boxes,
-        detect_boxes,
-        sorted_boxes,
-    )
     from openocr_spark.kernels.recognition import ctc_greedy_decode
+    from openocr_spark.operators.extract import detect_in_reading_order
 
     def kernel(batches):
         for pdf in batches:
             rows = []
             for ref in pdf["media_ref"].tolist():
                 p = payload_for_media_ref(ref)
-                boxes, scores = detect_boxes(
-                    p["score_map"],
-                    thresh=cfg.binarize_thresh,
-                    box_thresh=cfg.box_thresh,
-                    min_size=cfg.min_size,
-                    unclip_ratio=cfg.unclip_ratio,
+                boxes, scores, assigned = detect_in_reading_order(
+                    p["score_map"], p["regions"], cfg
                 )
-                order = sorted_boxes(boxes, line_tol=cfg.line_tol)
-                score_of = {id(b): s for b, s in zip(boxes, scores)}
-                pts = [np.asarray(r["points"]) for r in p["regions"]]
-                for idx, (box, ridx) in enumerate(
-                    zip(order, assign_regions_to_boxes(order, pts))
+                for idx, (box, det_score, ridx) in enumerate(
+                    zip(boxes, scores, assigned)
                 ):
                     text, rscore, gt_text = ("", 0.0, None)
                     if ridx >= 0:
@@ -654,7 +643,7 @@ def extract_detail(
                             "media_ref": ref,
                             "region_idx": idx,
                             "points": [[int(x), int(y)] for x, y in box],
-                            "det_score": float(score_of.get(id(box), 0.0)),
+                            "det_score": float(det_score),
                             "transcription": text,
                             "rec_score": float(rscore),
                             "gt_text": gt_text,

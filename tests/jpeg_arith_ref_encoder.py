@@ -14,12 +14,13 @@ bit-identically to the Huffman entropy layer.
 
 from __future__ import annotations
 
+import os
 import struct
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from jpeg_ref_encoder import ZIG, K1, _color_planes, _dqt_seg, _seg, fdct_8x8  # noqa: E402
 
 from openocr_spark.kernels.jpeg_arith import FIXED_BIN, QE_TABLE  # noqa: E402

@@ -27,13 +27,15 @@ nothing with the package.
 
 from __future__ import annotations
 
+import os
 import struct
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+_TESTS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(_TESTS))
+sys.path.insert(0, _TESTS)
 from jpeg_ref_encoder import (  # noqa: E402
     ZIG,
     _BitWriter,

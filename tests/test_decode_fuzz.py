@@ -257,3 +257,19 @@ def test_ras_depth_bomb_rejected_fast():
     with pytest.raises(Exception):
         decode_bytes(bytes(data))
     assert time.monotonic() - t0 < 2.0
+
+
+@pytest.mark.parametrize("tail", [b"\xff\x00", b"\xff\xd0"], ids=["stuffed", "rst"])
+def test_jpeg_scan_ending_in_two_byte_escape(tail):
+    """Regression: when the last two bytes of a truncated scan are a
+    stuffed FF 00 or an RSTn pair, the marker scan must run to the end
+    of the data. It returned None, and the decoder then raised a
+    TypeError, outside the decoder-error contract."""
+    from openocr_spark.kernels.jpeg_format import _next_marker
+
+    assert _next_marker(b"\x11\x22" + tail, 0) == 4
+    data = STREAMS["jpeg"]
+    cut = data.find(b"\xff\x00", data.index(b"\xff\xda"))
+    assert cut > 0  # the scan holds a stuffed byte to cut at
+    pages = decode_bytes(data[:cut] + tail)
+    assert [p.shape for p in pages] == [_img().shape]

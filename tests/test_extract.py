@@ -60,21 +60,6 @@ def test_extract_matches_oracle_joined_payloads(spark, docs_pdf, expected):
     assert got == expected
 
 
-def test_extract_joined_with_ratio_sort_matches(spark, docs_pdf, expected):
-    from openocr_spark.config import ExtractConfig
-
-    docs = _docs_df(spark, docs_pdf)
-    payloads_pdf = gen_media_payloads_pdf(media_refs_of(docs_pdf))
-    payloads = spark.createDataFrame(
-        payloads_pdf.to_dict("records"), schema=schemas.MEDIA_PAYLOADS
-    )
-    cfg = ExtractConfig(ratio_sort=True)
-    got = _spans_map(
-        [r.asDict(recursive=True) for r in extract(docs, payloads, cfg).collect()]
-    )
-    assert got == expected
-
-
 def test_distributed_generator_matches_single_node(spark, docs_pdf):
     dist = documents_df(spark, N_DOCS, partitions=4)
     got = {

@@ -38,14 +38,20 @@ def test_small_side_autobroadcasts_in_join_agg(spark):
 def test_extract_shuffle_budget(spark):
     """The pipeline's structural shuffles: 1 salted media repartition +
     1 assembly groupBy (+1 union-side agg partial counts as part of the
-    same exchange pair). No hidden extras like a join back to input."""
+    same exchange pair). No hidden extras like a join back to input.
+    Both payload modes run the one mapInArrow kernel."""
+    from openocr_spark.fixtures import media_payloads_df
+
     docs = documents_df(spark, 50)
-    out = extract(docs)
-    n = plans.count_exchanges(out)
-    assert n <= 3, plans.physical_plan(out)
-    plan = plans.physical_plan(out)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    for out in (extract(docs), extract(docs, media_payloads_df(spark, docs))):
+        plan = plans.physical_plan(out)
+        assert plans.count_exchanges(out) <= 3, plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
+        # the fixture generators plan as MapInPandas `gen`; the
+        # extraction kernel is the node named `kernel`
+        assert "MapInArrow kernel(" in plan, plan
+        assert "MapInPandas kernel(" not in plan, plan
 
 
 def test_cosine_topk_is_distributed_takeordered(spark):
