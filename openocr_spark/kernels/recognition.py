@@ -19,26 +19,59 @@ from openocr_spark.config import ID_TO_CHAR
 
 
 def softmax(logits: np.ndarray, axis: int = -1) -> np.ndarray:
-    m = logits.max(axis=axis, keepdims=True)
-    e = np.exp(logits - m)
-    return e / e.sum(axis=axis, keepdims=True)
+    # exp and the division run in place on the one shifted copy
+    e = logits - logits.max(axis=axis, keepdims=True)
+    np.exp(e, out=e)
+    e /= e.sum(axis=axis, keepdims=True)
+    return e
 
 
-def ctc_greedy_decode(logits: np.ndarray) -> tuple[str, float]:
-    """logits float32[T, num_classes] → (text, confidence)."""
+def ctc_greedy_decode_batch(
+    logits: np.ndarray, offsets: np.ndarray
+) -> tuple[list[str], list[float]]:
+    """Greedy CTC over many regions at once: region k's logits are
+    rows offsets[k]:offsets[k+1] of the (ΣT, num_classes) block. One
+    float64 softmax/argmax/max over the block; the de-dup mask restarts
+    at each region's first timestep; one join of the kept characters is
+    sliced back per region. Each confidence is the mean over that
+    region's kept timesteps, taken on a contiguous slice so it equals
+    the one-region result bit for bit."""
+    offsets = np.asarray(offsets, dtype=np.int64)
+    n = len(offsets) - 1
     if logits.size == 0:
-        return "", 0.0
+        return [""] * n, [0.0] * n
     probs = softmax(logits.astype(np.float64), axis=1)
     ids = probs.argmax(axis=1)
     conf = probs.max(axis=1)
     keep = np.ones(len(ids), dtype=bool)
     keep[1:] = ids[1:] != ids[:-1]  # de-dup repeats (ctc_postprocess.py:62-64)
+    firsts = offsets[:-1]
+    keep[firsts[firsts < len(ids)]] = True  # ... within a region only
     keep &= ids != 0  # drop blank
-    if not keep.any():
-        return "", 0.0
+    chars = [ID_TO_CHAR.get(i, "") for i in range(logits.shape[1])]
     kept_ids = ids[keep]
-    text = "".join(ID_TO_CHAR.get(int(i), "") for i in kept_ids)
-    return text, float(conf[keep].mean())
+    text = "".join(np.take(chars, kept_ids).tolist())
+    char_len = np.array([len(c) for c in chars])
+    char_end = np.concatenate(([0], np.cumsum(char_len[kept_ids])))
+    kept_conf = conf[keep]
+    k = np.concatenate(([0], np.cumsum(keep)))[offsets].tolist()
+    pos = char_end[k].tolist()
+    texts, scores = [], []
+    for i in range(n):
+        a, b = k[i], k[i + 1]
+        texts.append(text[pos[i] : pos[i + 1]])
+        # add.reduce(x) / n is x.mean() without its Python overhead
+        scores.append(
+            float(np.add.reduce(kept_conf[a:b]) / (b - a)) if b > a else 0.0
+        )
+    return texts, scores
+
+
+def ctc_greedy_decode(logits: np.ndarray) -> tuple[str, float]:
+    """logits float32[T, num_classes] → (text, confidence); a one-region
+    call of `ctc_greedy_decode_batch`."""
+    texts, scores = ctc_greedy_decode_batch(logits, np.array([0, len(logits)]))
+    return texts[0], scores[0]
 
 
 NRTR_SPECIALS = ("blank", "<unk>", "<s>", "</s>")
@@ -121,16 +154,3 @@ def gtc_decode(
     if only_gtc:
         return gtc, None
     return gtc, ctc_greedy_decode(ctc_logits)
-
-
-def ctc_greedy_decode_batch(
-    logits_batch: list[np.ndarray],
-) -> tuple[list[str], list[float]]:
-    """Decode a batch. Inside one Arrow batch this is the analog of the
-    reference's padded-batch forward (tools/infer_rec.py:363-429)."""
-    texts, scores = [], []
-    for lg in logits_batch:
-        t, s = ctc_greedy_decode(lg)
-        texts.append(t)
-        scores.append(s)
-    return texts, scores

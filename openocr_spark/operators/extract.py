@@ -13,7 +13,9 @@ SURVEY §3.1-3.2 from tools/infer_e2e.py:220-402 / infer_doc_onnx.py:758-1028):
               uniformly regardless of how many media spans a single
               document has (media-heavy skew tail, SURVEY §4 O5)
             → mapInArrow det+rec kernel (one body for both payload
-              modes; per-row numpy)
+              modes; each Arrow batch is one detect → assign → CTC
+              pass over flat arrays: a mask stack labelled at once, all
+              regions' logits decoded as one block)
   → unionByName
   → groupBy(doc_id): collect → array_sort by offset → index ⇒ `order`
     [second shuffle, partitioned by doc_id]
@@ -26,12 +28,16 @@ Scale notes (100 TB / 10^12 docs):
     tables bucketed by media_ref (Iceberg `bucket(N, media_ref)`) it is
     a storage-partitioned join — no shuffle of the heavy payload side.
   - the kernel stage holds ≤ arrow.maxRecordsPerBatch payloads in memory
-    per task; executor memory is bounded regardless of doc skew.
+    per task, plus the batch kernel's working set (one bool mask stack
+    and one float64 logits block), which scales with that value;
+    executor memory is bounded regardless of doc skew.
   - final assembly groups whole documents so the reading-order semantics
     (W1) stay exact under distribution.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -40,11 +46,13 @@ from pyspark.sql import functions as F
 from openocr_spark import schemas
 from openocr_spark.config import DEFAULT_CONFIG, ExtractConfig
 from openocr_spark.kernels.detection import (
-    assign_regions_to_boxes,
-    detect_boxes,
+    as_prob,
+    detect_batch,
+    first_region_inside,
     reading_order,
+    region_centers,
 )
-from openocr_spark.kernels.recognition import ctc_greedy_decode
+from openocr_spark.kernels.recognition import ctc_greedy_decode_batch
 from openocr_spark.operators.boilerplate import is_boilerplate
 
 
@@ -81,10 +89,26 @@ def _gtc_head(logits: np.ndarray):
     return gtc_decode(logits, None, only_gtc=True)[0]
 
 
+def _per_region(head):
+    """Batch decoder over a per-region head: calls it on each region's
+    view into the logits block."""
+
+    def decode(logits: np.ndarray, offsets: np.ndarray):
+        bounds = np.asarray(offsets).tolist()
+        res = [head(logits[a:b]) for a, b in zip(bounds[:-1], bounds[1:])]
+        return [t for t, _ in res], [c for _, c in res]
+
+    return decode
+
+
 def _decode_fn(name: str, token_map=None):
     """Decode-head dispatch by config name — the build_post_process
     analog (openrec/postprocess/__init__.py maps the yml PostProcess
     name to a decode class; here it maps cfg.rec_head to a kernel).
+    Returns a batch decoder `decode(logits, offsets) -> (texts, scores)`
+    over a (ΣT, C) logits block, region k being rows
+    offsets[k]:offsets[k+1]: CTC decodes the block vectorized, every
+    other head runs per region through `_per_region`.
     Every single-logits-compatible head family is reachable; the
     tokenizer-backed heads additionally require cfg.token_map (the
     trained-tokenizer artifact) and fail fast at closure-build time
@@ -98,7 +122,6 @@ def _decode_fn(name: str, token_map=None):
     )
 
     table = {
-        "ctc": ctc_greedy_decode,
         "nrtr": nrtr_greedy_decode,
         # char primary: the CharLabelDecode main branch decodes over the
         # same NRTR vocabulary with the same EOS/skip rules
@@ -145,13 +168,15 @@ def _decode_fn(name: str, token_map=None):
                 ids, probs = H._argmax_conf(logits)
                 return H.mgp_wp_decode(ids, probs, id_to_token, sep_id=sep)
 
-        return tok_head
+        return _per_region(tok_head)
+    if name == "ctc":
+        return ctc_greedy_decode_batch
     try:
-        return table[name]
+        return _per_region(table[name])
     except KeyError:
         raise ValueError(
             f"unknown rec_head {name!r}; expected one of "
-            f"{', '.join(sorted(table))}, {', '.join(sorted(TOKENIZER_HEADS))}"
+            f"ctc, {', '.join(sorted(table))}, {', '.join(sorted(TOKENIZER_HEADS))}"
         ) from None
 
 
@@ -165,133 +190,246 @@ REC_HEAD_NAMES: tuple[str, ...] = (
 )
 
 
+class MediaBatch(NamedTuple):
+    """The payloads of one Arrow batch as flat arrays. Region k of the
+    batch owns logits rows t_off[k]:t_off[k+1]; row i owns regions
+    reg_off[i]:reg_off[i+1]."""
+
+    probs: list[np.ndarray]  # per row: 2-D score map, float32 or uint8 prob × 255
+    reg_off: np.ndarray  # per row, into the regions (n_rows + 1)
+    centers: np.ndarray  # per region: (x, y) centre of its points
+    logits: np.ndarray  # all regions' logits, (ΣT, C) float32
+    t_off: np.ndarray  # per region, into logits (n_regions + 1)
+
+
+def _centers(regions_per_row: list[list[dict]]) -> np.ndarray:
+    regs = [r for rs in regions_per_row for r in rs]
+    points = np.array(
+        [q for r in regs for q in r["points"]], dtype=np.int64
+    ).reshape(-1, 2)
+    return region_centers(points, np.cumsum([0] + [len(r["points"]) for r in regs]))
+
+
+def _media_batch(
+    probs: list[np.ndarray], regions_per_row: list[list[dict]]
+) -> MediaBatch:
+    """MediaBatch from in-memory payloads (`payload_for_media_ref`
+    shape: regions are dicts with points and logits arrays)."""
+    from openocr_spark.config import NUM_CLASSES
+
+    logits = [r["logits"] for rs in regions_per_row for r in rs]
+    return MediaBatch(
+        probs,
+        np.cumsum([0] + [len(rs) for rs in regions_per_row]),
+        _centers(regions_per_row),
+        np.concatenate(logits).astype(np.float32, copy=False)
+        if logits
+        else np.zeros((0, NUM_CLASSES), dtype=np.float32),
+        np.cumsum([0] + [len(lg) for lg in logits]),
+    )
+
+
+def _detect_rows(
+    probs: list[np.ndarray],
+    reg_off: np.ndarray,
+    centers: np.ndarray,
+    cfg: ExtractConfig,
+) -> tuple[np.ndarray, np.ndarray, list[tuple[list[int], list[int]]]]:
+    """detect → reading order → region lookup for a batch of score maps:
+    (quads, scores, rows), where rows[i] is (the indices into quads of
+    row i's boxes in reading order, per box the row-local index of the
+    region whose logits it reads, -1 if none — the crop-step
+    surrogate). Ordering and lookup run per row on plain lists."""
+    box_off, quads, scores = detect_batch(
+        probs,
+        thresh=cfg.binarize_thresh,
+        box_thresh=cfg.box_thresh,
+        min_size=cfg.min_size,
+        unclip_ratio=cfg.unclip_ratio,
+    )
+    box_off, reg_off = box_off.tolist(), np.asarray(reg_off).tolist()
+    boxes, cents = quads.tolist(), centers.tolist()
+    rows = []
+    for i in range(len(probs)):
+        b0 = box_off[i]
+        mine = boxes[b0 : box_off[i + 1]]
+        order = reading_order(mine, line_tol=cfg.line_tol)
+        assigned = first_region_inside(
+            [mine[j] for j in order], cents[reg_off[i] : reg_off[i + 1]]
+        )
+        rows.append(([b0 + j for j in order], assigned))
+    return quads, scores, rows
+
+
 def detect_in_reading_order(
     prob: np.ndarray, regions: list[dict], cfg: ExtractConfig
 ) -> tuple[list[np.ndarray], list[float], list[int]]:
     """detect → reading order → region lookup, shared by the extraction
     kernel and `metrics.extract_detail`: the detected boxes in reading
     order, their detection scores, and per box the index of the region
-    whose logits it reads (-1 if none; the crop-step surrogate)."""
-    boxes, scores = detect_boxes(
-        prob,
-        thresh=cfg.binarize_thresh,
-        box_thresh=cfg.box_thresh,
-        min_size=cfg.min_size,
-        unclip_ratio=cfg.unclip_ratio,
+    whose logits it reads (-1 if none; the crop-step surrogate). A
+    one-item call of the batch flow."""
+    quads, scores, rows = _detect_rows(
+        [prob], [0, len(regions)], _centers([regions]), cfg
     )
-    order = reading_order(boxes, line_tol=cfg.line_tol)
-    boxes = [boxes[i] for i in order]
-    pts = [np.asarray(r["points"]) for r in regions]
-    return boxes, [scores[i] for i in order], assign_regions_to_boxes(boxes, pts)
+    idx, assigned = rows[0]
+    return [quads[j] for j in idx], [float(scores[j]) for j in idx], assigned
+
+
+def _extract_texts(mb: MediaBatch, cfg: ExtractConfig, decode) -> list[str]:
+    """Per-row kernel flow over a whole batch: detect → reading order →
+    recognize → filter → newline-join (infer_e2e.py:155-218
+    infer_single_image analog). Every region's logits are decoded in
+    one call of the batch decoder; each box reads its region's result."""
+    _, _, rows = _detect_rows(mb.probs, mb.reg_off, mb.centers, cfg)
+    texts, scores = decode(mb.logits, mb.t_off)
+    keep_all = cfg.rec_head in NO_CONF_HEADS
+    return [
+        "\n".join(
+            texts[r0 + r]
+            for r in assigned
+            if r >= 0 and (keep_all or scores[r0 + r] >= cfg.drop_score)
+        )
+        for (_, assigned), r0 in zip(rows, np.asarray(mb.reg_off).tolist())
+    ]
 
 
 def _process_media_arrays(
     prob: np.ndarray, regions: list[dict], cfg: ExtractConfig, decode=None
 ) -> str:
-    """Per-media kernel flow: detect → reading order → recognize → filter
-    → newline-join (infer_e2e.py:155-218 infer_single_image analog).
-    `decode` is the resolved decode-head kernel — the batch kernel
-    resolves it ONCE at closure-build time (driver side, so a bad
-    cfg.rec_head fails before any job launches, and the hot loop skips
-    168k dispatch lookups); None resolves here for direct callers."""
+    """Per-media kernel flow, a one-item call of `_extract_texts`.
+    `decode` is the resolved batch decoder — the kernel resolves it ONCE
+    at closure-build time (driver side, so a bad cfg.rec_head fails
+    before any job launches); None resolves here for direct callers."""
     if decode is None:
         decode = _decode_fn(cfg.rec_head, cfg.token_map)
-    _, _, assigned = detect_in_reading_order(prob, regions, cfg)
-    texts = []
-    for ridx in assigned:
-        if ridx < 0:
-            continue
-        text, score = decode(regions[ridx]["logits"])
-        if score >= cfg.drop_score or cfg.rec_head in NO_CONF_HEADS:
-            texts.append(text)
-    return "\n".join(texts)
+    return _extract_texts(_media_batch([prob], [regions]), cfg, decode)[0]
 
 
-def _prob_from_buffer(buf, h: int, w: int) -> np.ndarray:
-    """Decode a score-map payload cell, dtype sniffed from its length:
-    h·w·4 bytes = float32; h·w bytes = uint8 (probability × 255 — the
-    4×-narrower storage/wire format media_payloads_df writes by
-    default; maps quantized to the /255 grid at generation, so the
-    round-trip is LOSSLESS and both payload paths stay bit-equal)."""
-    if len(buf) == h * w * 4:
-        return np.frombuffer(buf, dtype=np.float32).reshape(h, w)
-    if len(buf) == h * w:
-        u8 = np.frombuffer(buf, dtype=np.uint8).reshape(h, w)
-        # float32 division, matching the generator's k/255 arithmetic
-        # exactly (a *(1/255) form would differ in the last ulp)
-        return u8.astype(np.float32) / np.float32(255.0)
+def _score_map(cell: np.ndarray, h: int, w: int) -> np.ndarray:
+    """A score-map payload cell (uint8 bytes) as a 2-D view, dtype
+    sniffed from its length: h·w·4 bytes = float32; h·w bytes = uint8
+    (probability × 255 — the 4×-narrower storage/wire format
+    media_payloads_df writes by default; maps are quantized to the /255
+    grid at generation, so `as_prob` restores them LOSSLESSLY and both
+    payload paths stay bit-equal)."""
+    if len(cell) == h * w * 4:
+        return cell.view(np.float32).reshape(h, w)
+    if len(cell) == h * w:
+        return cell.reshape(h, w)
     raise ValueError(
-        f"score_map payload of {len(buf)} bytes matches neither "
+        f"score_map payload of {len(cell)} bytes matches neither "
         f"float32 ({h * w * 4}) nor uint8 ({h * w}) for shape {h}x{w}"
     )
 
 
-def _logits_from_buffer(buf, t: int) -> np.ndarray:
-    """Decode a logits payload cell of t timesteps, dtype sniffed
-    against the engine's class count: t·C·4 bytes = float32, t·C·2 =
-    float16 (the lossless narrow format payload_row writes when every
-    value is exactly float16-representable). The class-count anchor is
-    required — C is even, so "divisible by 4t" alone would misread a
-    float16 buffer as a float32 one with half the columns. Returns
-    float32 — for the narrow format the up-cast is bit-exact by the
-    writer's contract."""
+def _prob_from_buffer(buf, h: int, w: int) -> np.ndarray:
+    """Decode one score-map payload cell to float32 probabilities."""
+    return as_prob(_score_map(np.frombuffer(buf, dtype=np.uint8), h, w))
+
+
+def _logits_block(data: np.ndarray, byte_off: np.ndarray, ts: np.ndarray) -> np.ndarray:
+    """Decode logits payload cells into one (ΣT, C) float32 block: cell
+    k is data[byte_off[k]:byte_off[k+1]] with ts[k] timesteps, its dtype
+    sniffed against the engine's class count: T·C·4 bytes = float32,
+    T·C·2 = float16 (the lossless narrow format payload_row writes when
+    every value is exactly float16-representable). The class-count
+    anchor is required — C is even, so "divisible by 4T" alone would
+    misread a float16 buffer as a float32 one with half the columns.
+    For the narrow format the up-cast is bit-exact by the writer's
+    contract. A zero-timestep cell is empty and adds no rows."""
     from openocr_spark.config import NUM_CLASSES
 
-    if len(buf) == t * NUM_CLASSES * 4:
-        return np.frombuffer(buf, dtype=np.float32).reshape(t, -1)
-    if len(buf) == t * NUM_CLASSES * 2:
-        return np.frombuffer(buf, dtype=np.float16).reshape(t, -1).astype(np.float32)
-    raise ValueError(
-        f"logits payload of {len(buf)} bytes is neither float32 "
-        f"({t * NUM_CLASSES * 4}) nor float16 ({t * NUM_CLASSES * 2}) "
-        f"for {t} timesteps x {NUM_CLASSES} classes"
+    byte_off = np.asarray(byte_off, dtype=np.int64)
+    ts = np.asarray(ts, dtype=np.int64)
+    lens = np.diff(byte_off)
+    is16 = lens == ts * NUM_CLASSES * 2
+    bad = np.flatnonzero(~is16 & (lens != ts * NUM_CLASSES * 4))
+    if len(bad):
+        n, t = int(lens[bad[0]]), int(ts[bad[0]])
+        raise ValueError(
+            f"logits payload of {n} bytes is neither float32 "
+            f"({t * NUM_CLASSES * 4}) nor float16 ({t * NUM_CLASSES * 2}) "
+            f"for {t} timesteps x {NUM_CLASSES} classes"
+        )
+    raw = data[byte_off[0] : byte_off[-1]]
+    if is16.all():
+        return raw.view(np.float16).reshape(-1, NUM_CLASSES).astype(np.float32)
+    out = np.empty((int(ts.sum()), NUM_CLASSES), dtype=np.float32)
+    byte16, row16 = np.repeat(is16, lens), np.repeat(is16, ts)
+    out[row16] = raw[byte16].view(np.float16).reshape(-1, NUM_CLASSES)
+    out[~row16] = raw[~byte16].view(np.float32).reshape(-1, NUM_CLASSES)
+    return out
+
+
+def _logits_from_buffer(buf, t: int) -> np.ndarray:
+    """Decode one logits payload cell of t timesteps to float32 [t, C]."""
+    return _logits_block(np.frombuffer(buf, dtype=np.uint8), [0, len(buf)], [t])
+
+
+def _binary_cells(col) -> tuple[np.ndarray, np.ndarray]:
+    """A binary Arrow array's data buffer as uint8 plus its per-cell
+    offsets into it, both zero-copy (offsets honour a sliced array)."""
+    _, off_buf, data_buf = col.buffers()
+    off = np.frombuffer(off_buf, dtype=np.int32)[col.offset : col.offset + len(col) + 1]
+    if data_buf is None:  # every cell empty
+        return np.empty(0, np.uint8), off
+    return np.frombuffer(data_buf, np.uint8), off
+
+
+def _joined_payloads(batch) -> MediaBatch:
+    """MediaBatch of a batch joined with media_payloads.
+
+    The payload columns are wide binary cells (~15KB score maps,
+    logits); a pandas batch would materialize every cell as a Python
+    bytes object (copy) and every region as a dict — measured 59s for
+    an 11GB batch stream where the actual decode work is ~2s. Here the
+    score maps are 2-D views into the Arrow buffer, the logits one
+    block decoded from the contiguous binary buffer, and the points one
+    int array — no per-cell Arrow scalars."""
+    data, off = _binary_cells(batch.column("score_map"))
+    off = off.tolist()
+    probs = [
+        _score_map(data[off[i] : off[i + 1]], h, w)
+        for i, (h, w) in enumerate(
+            zip(batch.column("height").to_pylist(), batch.column("width").to_pylist())
+        )
+    ]
+    regions = batch.column("regions")
+    reg_off = regions.offsets.to_numpy()
+    regs = regions.flatten()
+    points = regs.field("points")
+    pt_off = points.offsets.to_numpy()
+    xy = points.flatten().flatten().to_numpy(zero_copy_only=False)
+    if len(xy) != 2 * (pt_off[-1] - pt_off[0]):
+        raise ValueError("region points must be [x, y] pairs")
+    lg_data, lg_off = _binary_cells(regs.field("logits"))
+    ts = regs.field("logits_t").to_numpy()
+    return MediaBatch(
+        probs,
+        reg_off - reg_off[0],
+        region_centers(xy.reshape(-1, 2), pt_off - pt_off[0]),
+        _logits_block(lg_data, lg_off, ts),
+        np.concatenate(([0], np.cumsum(ts, dtype=np.int64))),
     )
 
 
-def _joined_payloads(batch):
-    """(prob, regions) per row of a batch joined with media_payloads.
-
-    The payload columns are wide binary cells (~60KB score maps, logits);
-    a pandas batch would materialize every cell as a Python bytes object
-    (copy) and every region as a dict — measured 59s for an 11GB batch
-    stream where the actual decode work is ~2s. numpy wraps the Arrow
-    buffers zero-copy (`scalar.as_buffer()`), so only the small int and
-    points columns are materialized."""
-    heights = batch.column("height").to_pylist()
-    widths = batch.column("width").to_pylist()
-    sm_col = batch.column("score_map")
-    regions_col = batch.column("regions")
-    for i in range(batch.num_rows):
-        prob = _prob_from_buffer(
-            sm_col[i].as_buffer(), int(heights[i]), int(widths[i])
-        )
-        regs = regions_col[i]
-        regions = []
-        for j in range(len(regs)):
-            r = regs[j]
-            logits = _logits_from_buffer(
-                r["logits"].as_buffer(), int(r["logits_t"].as_py())
-            )
-            regions.append({"points": r["points"].as_py(), "logits": logits})
-        yield prob, regions
-
-
-def _synthesized_payloads(batch):
-    """(prob, regions) per row, generated deterministically from
-    media_ref inside the executor (fixture path — distributes
-    generation, nothing crosses the driver)."""
+def _synthesized_payloads(batch) -> MediaBatch:
+    """MediaBatch generated deterministically from media_ref inside the
+    executor (fixture path — distributes generation, nothing crosses
+    the driver)."""
     from openocr_spark.fixtures import payload_for_media_ref
 
-    for ref in batch.column("media_ref").to_pylist():
-        p = payload_for_media_ref(ref)
-        yield p["score_map"], p["regions"]
+    ps = [payload_for_media_ref(ref) for ref in batch.column("media_ref").to_pylist()]
+    return _media_batch([p["score_map"] for p in ps], [p["regions"] for p in ps])
 
 
 def _media_kernel(cfg: ExtractConfig, payloads):
     """mapInArrow det+rec kernel, one body for both payload modes.
-    `payloads(batch)` yields (prob, regions) for each row of a batch
-    (`_joined_payloads` or `_synthesized_payloads`); the row keys pass
-    through as Arrow columns."""
+    `payloads(batch)` turns a batch into a MediaBatch
+    (`_joined_payloads` or `_synthesized_payloads`), which
+    `_extract_texts` processes whole; the row keys pass through as
+    Arrow columns."""
 
     decode = _decode_fn(cfg.rec_head, cfg.token_map)  # driver-side fail-fast
 
@@ -299,16 +437,12 @@ def _media_kernel(cfg: ExtractConfig, payloads):
         import pyarrow as pa
 
         for batch in batches:
-            out_text = [
-                _process_media_arrays(prob, regions, cfg, decode)
-                for prob, regions in payloads(batch)
-            ]
             yield pa.RecordBatch.from_pydict(
                 {
                     "doc_id": batch.column("doc_id"),
                     "offset": batch.column("offset"),
                     "kind": ["media"] * batch.num_rows,
-                    "text": out_text,
+                    "text": _extract_texts(payloads(batch), cfg, decode),
                     "media_ref": batch.column("media_ref"),
                 }
             )
@@ -341,12 +475,13 @@ def extract_flat(
     if persist_spans:
         spans = spans.persist()
 
-    non_media = spans.filter(
-        (F.col("kind") != "media") | F.col("kind").isNull()
-    ).select(
+    # every span leaves a row here: text spans that pass the boilerplate
+    # filter as themselves, all others (boilerplate, media, null) as a
+    # tombstone with kind/text nulled — so a doc whose media spans all
+    # miss the payload join still reaches assembly
+    non_media = spans.select(
         "doc_id",
         "offset",
-        # tombstone boilerplate: kind/text nulled, row kept for doc presence
         F.when(
             (F.col("kind") == "text") & ~is_boilerplate(F.col("text")), F.col("kind")
         ).alias("kind"),

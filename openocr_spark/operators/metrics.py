@@ -735,10 +735,13 @@ def rec_heads_matrix(media_refs: DataFrame) -> DataFrame:
             rows = []
             for ref in pdf["media_ref"].tolist():
                 p = payload_for_media_ref(ref)
-                for ridx, reg in enumerate(p["regions"]):
-                    lg = np.asarray(reg["logits"], dtype=np.float64)
-                    res = {name: fn(lg) for name, fn in heads.items()}
-                    for head, (text, conf) in res.items():
+                lgs = [np.asarray(r["logits"], dtype=np.float64) for r in p["regions"]]
+                block = np.concatenate(lgs)
+                off = np.cumsum([0] + [len(lg) for lg in lgs])
+                res = {name: fn(block, off) for name, fn in heads.items()}
+                for ridx in range(len(lgs)):
+                    for head, (texts, confs) in res.items():
+                        text, conf = texts[ridx], confs[ridx]
                         rows.append(
                             {
                                 "media_ref": ref,

@@ -61,7 +61,9 @@ def get_spark(
             "spark.sql.warehouse.dir",
             os.path.join(os.environ.get("TMPDIR", "/tmp"), "openocr_warehouse"),
         )
-        # kernel batch size: bounds per-batch memory in mapInPandas kernels
+        # kernel batch size: the batch extraction kernel processes a whole
+        # Arrow batch at once, so its working set (mask stack, logits
+        # block) scales with this value
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # payload tables carry ~60KB binary cells; the default 4096-row
         # columnar reader batch would reserve ~250MB per scan task

@@ -312,3 +312,115 @@ def test_mgp_bpe_and_wp_heads_end_to_end(spark):
     assert bpe == media_texts(
         ExtractConfig(rec_head="mgp_bpe", token_map=tm, drop_score=0.0)
     )
+
+
+def test_joined_path_keeps_doc_whose_payloads_are_missing(spark, docs_pdf):
+    """Every input document appears on the joined path too: a media-only
+    doc whose payload rows are all missing drops out of the inner join,
+    and must still reach assembly as a doc with no spans."""
+    orphan = {
+        "doc_id": "doc-orphan-media",
+        "spans": [
+            {"kind": "media", "text": None, "media_ref": f"media://orphan/{i}", "offset": i}
+            for i in range(2)
+        ],
+    }
+    rows = docs_pdf.head(4).to_dict("records") + [orphan]
+    docs = spark.createDataFrame(rows, schema=schemas.DOCUMENTS)
+    payloads = spark.createDataFrame(
+        gen_media_payloads_pdf(media_refs_of(docs_pdf.head(4))).to_dict("records"),
+        schema=schemas.MEDIA_PAYLOADS,
+    )
+    got = _spans_map(
+        [r.asDict(recursive=True) for r in extract(docs, payloads).collect()]
+    )
+    assert set(got) == {r["doc_id"] for r in rows}
+    assert got["doc-orphan-media"] == []
+    want = _spans_map(extract_oracle(docs_pdf.head(4)).to_dict("records"))
+    assert {k: v for k, v in got.items() if k in want} == want
+
+
+def _payload_table(rows):
+    """Joined-payload Arrow table as the kernel receives it: the
+    MEDIA_PAYLOADS columns plus the row keys."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(schemas.MEDIA_PAYLOADS)
+    schema = schema.append(pa.field("doc_id", pa.string())).append(
+        pa.field("offset", pa.int32())
+    )
+    keyed = [dict(r, doc_id=f"d{i}", offset=i) for i, r in enumerate(rows)]
+    return pa.Table.from_pylist(keyed, schema=schema)
+
+
+def _run_joined_kernel(table, max_chunksize):
+    from openocr_spark.config import DEFAULT_CONFIG
+    from openocr_spark.operators.extract import _joined_payloads, _media_kernel
+
+    kernel = _media_kernel(DEFAULT_CONFIG, _joined_payloads)
+    out = kernel(iter(table.to_batches(max_chunksize=max_chunksize)))
+    return [t for b in out for t in b.column("text").to_pylist()]
+
+
+def test_joined_kernel_on_sliced_mixed_batches_matches_oracle():
+    """The batch kernel called directly on 7-row slices (nonzero Arrow
+    offsets) of a payload table mixing uint8/float32 score maps and
+    float16/float32 logits, row by row and within a row, plus one image
+    with more components than max_candidates: every fixture row equals
+    the oracle, and the crowded row reads nothing — its text regions lie
+    past the per-image cap, which leaves the other rows untouched."""
+    import numpy as np
+
+    from openocr_spark.config import DEFAULT_CONFIG
+    from openocr_spark.fixtures import payload_for_media_ref, payload_row
+    from openocr_spark.oracle import extract_media_text
+
+    refs = [f"media://batchmix/{i}" for i in range(17)]
+    rows = []
+    for i, ref in enumerate(refs):
+        row, p = payload_row(ref), payload_for_media_ref(ref)
+        if i % 3 == 1:
+            row["score_map"] = p["score_map"].tobytes()  # float32 map
+        for j, (reg, src) in enumerate(zip(row["regions"], p["regions"])):
+            if (i + j) % 2:
+                reg["logits"] = src["logits"].tobytes()  # float32 logits
+        rows.append(row)
+    # crowded: 2,560 single-pixel components above the fixture map
+    crowded = payload_row(refs[0])
+    top = np.full((64, crowded["width"]), 13, dtype=np.uint8)
+    top[::2, ::2] = 230
+    crowded["score_map"] = top.tobytes() + crowded["score_map"]
+    crowded["height"] += 64
+    for reg in crowded["regions"]:
+        reg["points"] = [[x, y + 64] for x, y in reg["points"]]
+    rows.insert(9, crowded)
+    want = [extract_media_text(ref, DEFAULT_CONFIG) for ref in refs]
+    want.insert(9, "")
+    assert any(want) and extract_media_text(refs[0], DEFAULT_CONFIG)
+    assert _run_joined_kernel(_payload_table(rows), 7) == want
+
+
+def test_zero_timestep_region_decodes_empty():
+    """A region with zero-timestep logits (logits_t = 0, empty buffer)
+    decodes to ("", 0.0) — dropped by drop_score — instead of failing
+    the batch; the other regions of the row still read."""
+    from openocr_spark.config import DEFAULT_CONFIG
+    from openocr_spark.fixtures import payload_row
+    from openocr_spark.oracle import media_detail
+
+    refs = [f"media://zero-t/{i}" for i in range(6)]
+    rows = [payload_row(ref) for ref in refs]
+    empty_gt = rows[2]["regions"][0]["gt_text"]
+    rows[2]["regions"][0].update(logits=b"", logits_t=0)
+    want = []
+    for i, ref in enumerate(refs):
+        want.append(
+            "\n".join(
+                d["transcription"]
+                for d in media_detail(ref, DEFAULT_CONFIG)
+                if d["rec_score"] >= DEFAULT_CONFIG.drop_score
+                and not (i == 2 and d["gt_text"] == empty_gt)
+            )
+        )
+    assert _run_joined_kernel(_payload_table(rows), 1024) == want

@@ -14,7 +14,11 @@ from openocr_spark.functions.text import (
     truncate_repeated_tail,
     truncate_repetitive_content,
 )
-from openocr_spark.kernels.detection import connected_components, sorted_boxes
+from openocr_spark.kernels.detection import (
+    _label_components,
+    connected_components,
+    sorted_boxes,
+)
 from openocr_spark.kernels.recognition import ctc_greedy_decode
 from openocr_spark.oracle import _flood_components
 
@@ -44,12 +48,25 @@ def test_ctc_decode_never_repeats_adjacent(ids):
     assert len(text) <= len(ids)
 
 
-@given(st.integers(0, 10**6))
+@given(st.integers(0, 10**6), st.integers(1, 6))
 @settings(max_examples=30, deadline=None)
-def test_cc_equals_flood_fill_on_random_masks(seed):
+def test_cc_equals_flood_fill_on_random_masks(seed, n_images):
+    """The batch labeller on a stack of masks of mixed shapes and
+    densities: each image's components, in scan order, are the flood
+    fill's; the one-image call agrees."""
     rng = _rng(f"mask-{seed}")
-    m = rng.random((24, 36)) > 0.55
-    assert sorted(connected_components(m)) == sorted(_flood_components(m))
+    masks = [
+        rng.random((int(rng.integers(1, 25)), int(rng.integers(1, 37))))
+        > rng.uniform(0.3, 0.8)
+        for _ in range(n_images)
+    ]
+    img, r0, r1, c0, c1 = _label_components(masks)
+    assert np.all(np.diff(img) >= 0)
+    for i, m in enumerate(masks):
+        mine = img == i
+        got = list(zip(*(a[mine].tolist() for a in (r0, r1, c0, c1))))
+        assert got == _flood_components(m)
+    assert connected_components(masks[0]) == _flood_components(masks[0])
 
 
 @given(st.lists(st.tuples(st.integers(0, 200), st.integers(0, 200)), max_size=12))
