@@ -3,10 +3,12 @@
 Closes the last entropy-codec stub in media_decode (the reference
 decodes JPEG via cv2.imdecode, opendet/preprocess/__init__.py:85-143):
 segment parse (DQT/DHT/SOF/DRI/SOS), canonical Huffman decode via a
-16-bit LUT (one peek per symbol) with 0xFF00 byte-unstuffing and RSTn
-restart handling, DC-diff + AC run-length/EOB/ZRL into a per-component
-zigzag coefficient store, then dequantize → inverse zigzag → 8×8 IDCT
-batched as one einsum per component (separable cosine basis) — the
+16-bit LUT (one peek per symbol; sequential scans first probe an 11-bit
+lookahead that yields code + magnitude in one step) with 0xFF00
+byte-unstuffing and RSTn restart handling, DC-diff + AC
+run-length/EOB/ZRL into a per-component zigzag coefficient store (one
+numpy scatter per sequential scan), then dequantize → inverse zigzag →
+8×8 IDCT batched as one einsum per component (separable cosine basis) — the
 same reconstruction path sequential and progressive scans share.
 Interleaved MCU layout with arbitrary (h,v) sampling factors (4:4:4
 and 4:2:0 covered by tests) and non-interleaved single-component
@@ -80,14 +82,26 @@ def idct_8x8(coef: np.ndarray) -> np.ndarray:
     return _A.T @ coef @ _A
 
 
+# width of the sequential scan's lookahead table (_HuffTable.fast)
+_FAST_BITS = 11
+
+
 class _HuffTable:
     """Canonical Huffman table (DHT BITS/HUFFVAL). Decoding uses a
     full 16-bit lookup table: every legal code of length L fills the
     2^(16-L) LUT slots sharing its prefix with (symbol, L), so one
     16-bit peek resolves any symbol in O(1) instead of the spec's
-    bit-at-a-time DECODE walk (F.2.2.3) — the entropy decode is the
-    hot loop of every Huffman scan. Slots no code reaches keep length
-    0 and fail loud."""
+    bit-at-a-time DECODE walk (F.2.2.3). Slots no code reaches keep
+    length 0 and fail loud. A code set that overflows its lengths
+    (more codes than a length can hold) is rejected, as libjpeg does.
+
+    `fast` is the sequential scan's lookahead (libjpeg-turbo / stb_image
+    "fast AC"), indexed by the next _FAST_BITS bits. A slot whose code
+    and magnitude bits both fit packs (value << 8) | (run << 4) |
+    total length: one lookup yields a whole coefficient. EOB (value 0,
+    run 0) and ZRL (value 0, run 15) codes that fit are packed the same
+    way. Every other slot is 0 and falls through to the 16-bit LUT.
+    Read as DC (run 0), a slot gives the DC difference directly."""
 
     def __init__(self, bits: list[int], vals: bytes) -> None:
         lut_sym = np.zeros(1 << 16, np.uint8)
@@ -102,7 +116,20 @@ class _HuffTable:
                 lut_len[lo:hi] = ln
                 code += 1
                 k += 1
+            if code > 1 << ln:
+                raise NotImplementedError("JPEG: oversubscribed Huffman table")
             code <<= 1
+        p = np.arange(1 << _FAST_BITS)
+        ln = lut_len[p << (16 - _FAST_BITS)].astype(np.int64)
+        sym = lut_sym[p << (16 - _FAST_BITS)].astype(np.int64)
+        run, size = sym >> 4, sym & 15
+        total = ln + size
+        mag = (p >> np.maximum(_FAST_BITS - total, 0)) & ((1 << size) - 1)
+        val = np.where(mag < (1 << size) >> 1, mag + 1 - (1 << size), mag)
+        fits = (ln > 0) & (total <= _FAST_BITS) & (
+            (size > 0) | (run == 0) | (run == 15)
+        )
+        self.fast = np.where(fits, (val << 8) | (run << 4) | total, 0).tolist()
         self.lut_sym = lut_sym.tolist()
         self.lut_len = lut_len.tolist()
 
@@ -125,9 +152,58 @@ def _huff_table(bits: list[int], vals: bytes) -> _HuffTable:
     return t
 
 
+def _refill(d: bytes, pos: int, acc: int, nb: int) -> tuple[int, int, int]:
+    """Buffer entropy-coded bits until more than 40 are held: returns
+    the new (byte position, accumulator, bit count). 0xFF00 is
+    unstuffed to 0xFF; at any other marker, or at the end of the data,
+    the position stops and zero bits are supplied (the spec allows the
+    padding past EOI). A 4-byte chunk without 0xFF lands in one
+    int.from_bytes. Consumers read only the low `nb` bits of `acc`."""
+    n = len(d)
+    while nb <= 40:
+        if pos + 4 <= n:
+            chunk = d[pos : pos + 4]
+            if 0xFF not in chunk:
+                acc = (acc << 32) | int.from_bytes(chunk, "big")
+                nb += 32
+                pos += 4
+                continue
+        if pos >= n:
+            acc <<= 8
+            nb += 8  # pad with zeros past EOI (spec allows)
+            continue
+        b = d[pos]
+        if b == 0xFF:
+            nxt = d[pos + 1] if pos + 1 < n else 0xD9
+            if nxt == 0x00:
+                pos += 2
+            else:
+                # restart (consumed by _skip_restart, not here) or any
+                # other marker: stop producing real bits, pad zeros
+                acc <<= 8
+                nb += 8
+                continue
+        else:
+            pos += 1
+        acc = (acc << 8) | b
+        nb += 8
+    return pos, acc & ((1 << nb) - 1), nb
+
+
+def _skip_restart(d: bytes, pos: int) -> int:
+    """Position just past the next RSTn marker at or after `pos`."""
+    while pos + 1 < len(d):
+        if d[pos] == 0xFF and 0xD0 <= d[pos + 1] <= 0xD7:
+            return pos + 2
+        pos += 1
+    raise NotImplementedError("JPEG: expected restart marker")
+
+
 class _BitReader:
     """MSB-first bit reader over entropy-coded data with 0xFF00
-    unstuffing; stops at any non-RST marker."""
+    unstuffing; stops at any non-RST marker. The progressive and
+    lossless scans read through it; the sequential scan keeps the same
+    state in locals."""
 
     def __init__(self, data: bytes, pos: int) -> None:
         self.data = data
@@ -136,49 +212,9 @@ class _BitReader:
         self.nbits = 0
 
     def _fill(self) -> None:
-        # Refill to >= 41 buffered bits (was: >= 25), with a bulk fast
-        # path: a 4-byte chunk with no 0xFF needs no unstuff/marker
-        # handling and lands in one int.from_bytes — this loop is the
-        # hottest line of the JPEG entropy decode (guide §1.2 per-task
-        # work). Locals + end-of-call state writeback avoid ~10
-        # attribute accesses per buffered byte. Consumers read only the
-        # low `nbits` bits of `acc` (every read masks/shifts), so
-        # masking once at the end instead of every byte is equivalent.
-        d = self.data
-        pos = self.pos
-        acc = self.acc
-        nb = self.nbits
-        n = len(d)
-        while nb <= 40:
-            if pos + 4 <= n:
-                chunk = d[pos : pos + 4]
-                if 0xFF not in chunk:
-                    acc = (acc << 32) | int.from_bytes(chunk, "big")
-                    nb += 32
-                    pos += 4
-                    continue
-            if pos >= n:
-                acc <<= 8
-                nb += 8  # pad with zeros past EOI (spec allows)
-                continue
-            b = d[pos]
-            if b == 0xFF:
-                nxt = d[pos + 1] if pos + 1 < n else 0xD9
-                if nxt == 0x00:
-                    pos += 2
-                else:
-                    # restart (consumed by restart(), not here) or any
-                    # other marker: stop producing real bits, pad zeros
-                    acc <<= 8
-                    nb += 8
-                    continue
-            else:
-                pos += 1
-            acc = (acc << 8) | b
-            nb += 8
-        self.pos = pos
-        self.acc = acc & ((1 << nb) - 1)
-        self.nbits = nb
+        self.pos, self.acc, self.nbits = _refill(
+            self.data, self.pos, self.acc, self.nbits
+        )
 
     def bit(self) -> int:
         if self.nbits == 0:
@@ -205,13 +241,7 @@ class _BitReader:
         """Byte-align and consume one RSTn marker."""
         self.acc = 0
         self.nbits = 0
-        d = self.data
-        while self.pos + 1 < len(d):
-            if d[self.pos] == 0xFF and 0xD0 <= d[self.pos + 1] <= 0xD7:
-                self.pos += 2
-                return
-            self.pos += 1
-        raise NotImplementedError("JPEG: expected restart marker")
+        self.pos = _skip_restart(self.data, self.pos)
 
 
 def _huff_decode(r: _BitReader, t: _HuffTable) -> int:
@@ -858,116 +888,152 @@ def _sequential_scan(data, pos, frame, scan, htables, restart_interval, store):
     scans are non-interleaved per T.81 A.2.2 — block raster over the
     component's own grid with one data unit per MCU — which also lets
     a sequential frame spread its components across several scans.
-    Per block, coefficients accumulate in a plain Python list (the
-    entropy loop is serial bit work; per-coefficient ndarray stores
-    measured ~2× slower) and land in the store with one assignment."""
-    r = _BitReader(data, pos)
-    pred = {c["id"]: 0 for c, _td, _ta in scan}
+
+    The entropy loop is serial bit work, so it is written for the
+    fewest interpreted operations per symbol: one loop over the data
+    units in decode order, the bit reader's position / accumulator /
+    bit count in locals, most symbols resolved by one `fast` lookahead
+    probe, and each nonzero coefficient appended as (flat index, value)
+    to two lists that land in the store with one numpy scatter at the
+    end of the scan (a 64-int row assignment per block costs about a
+    quarter of the block's decode)."""
+    ids = [c["id"] for c, _td, _ta in scan]
+    if len(set(ids)) != len(ids):
+        raise NotImplementedError("JPEG: component repeated in scan")
+    tabs = []
+    for _c, td, ta in scan:
+        dc, ac = htables[(0, td)], htables[(1, ta)]
+        tabs.append(
+            (dc.fast, dc.lut_len, dc.lut_sym, ac.fast, ac.lut_len, ac.lut_sym)
+        )
+    # data units in decode order, one row per MCU: the unit's scan slot
+    # and the flat index of its DC coefficient. The flat index space
+    # chains each scan component's covered block grid: the whole
+    # MCU-padded store when interleaved, the component's own grid
+    # otherwise (restart intervals then count single blocks)
+    if len(scan) > 1:
+        comps = frame["comps"]
+        mcus_x = -(-frame["w"] // (8 * max(c["h"] for c in comps)))
+        mcus_y = -(-frame["h"] // (8 * max(c["v"] for c in comps)))
+        grids = [(mcus_y * c["v"], mcus_x * c["h"]) for c, _td, _ta in scan]
+        offs = np.cumsum([0] + [64 * gh * gw for gh, gw in grids])
+        my, mx = np.divmod(np.arange(mcus_y * mcus_x), mcus_x)
+        slot_cols, base_cols = [], []
+        for j, (comp, _td, _ta) in enumerate(scan):
+            by, bx = np.divmod(np.arange(comp["v"] * comp["h"]), comp["h"])
+            row = my[:, None] * comp["v"] + by
+            col = mx[:, None] * comp["h"] + bx
+            base_cols.append(offs[j] + 64 * (row * grids[j][1] + col))
+            slot_cols.append(np.full(row.shape, j))
+        bases = np.concatenate(base_cols, axis=1)
+        slots = np.concatenate(slot_cols, axis=1)
+    else:
+        grids = [_comp_blocks(frame, scan[0][0])]
+        offs = [0, 64 * grids[0][0] * grids[0][1]]
+        bases = np.arange(0, offs[1], 64)[:, None]
+        slots = np.zeros_like(bases)
+    n_mcu = len(bases)
+    step = restart_interval or n_mcu
     # differential frames (hierarchical mode) code DC directly
     # (PRED = 0); _progressive_planes omits their level shift
     diff_frame = bool(frame.get("differential"))
 
-    # hoist the per-scan-component Huffman tables + stores out of the
-    # per-block loop: the (class, id) dict lookups allocated a key
-    # tuple per block (two per block, hot path — guide §1.2)
-    resolved = {
-        c["id"]: (htables[(0, td)], htables[(1, ta)], store[c["id"]])
-        for c, td, ta in scan
-    }
+    d = data
+    acc = nb = 0
+    fbits, fmask = _FAST_BITS, (1 << _FAST_BITS) - 1
+    idx: list[int] = []
+    vals: list[int] = []
+    put_i, put_v = idx.append, vals.append
+    for start in range(0, n_mcu, step):
+        if start:
+            pos = _skip_restart(d, pos)
+            acc = nb = 0
+        preds = [0] * len(scan)
+        for slot, base in zip(slots[start : start + step].ravel().tolist(),
+                              bases[start : start + step].ravel().tolist()):
+            dc_fast, dc_len, dc_sym, ac_fast, ac_len, ac_sym = tabs[slot]
+            if nb < 16:
+                pos, acc, nb = _refill(d, pos, acc, nb)
+            e = dc_fast[(acc >> (nb - fbits)) & fmask]
+            if e and not e & 0xF0:
+                nb -= e & 15
+                diff = e >> 8
+            else:
+                w16 = (acc >> (nb - 16)) & 0xFFFF
+                t = dc_len[w16]
+                if t == 0:
+                    raise NotImplementedError("JPEG: invalid Huffman code")
+                nb -= t
+                t = dc_sym[w16]
+                if t:
+                    if nb < t:
+                        pos, acc, nb = _refill(d, pos, acc, nb)
+                    nb -= t
+                    v = (acc >> nb) & ((1 << t) - 1)
+                    diff = v - (1 << t) + 1 if v < (1 << (t - 1)) else v
+                else:
+                    diff = 0
+            if not diff_frame:
+                preds[slot] += diff
+                diff = preds[slot]
+            put_i(base)
+            put_v(diff)
+            k = 1
+            while k < 64:
+                if nb < 16:
+                    chunk = d[pos : pos + 6]
+                    if 0xFF in chunk or len(chunk) < 6:
+                        pos, acc, nb = _refill(d, pos, acc, nb)
+                    else:
+                        acc = ((acc << 48) | int.from_bytes(chunk, "big")) & (
+                            0xFFFFFFFFFFFFFFFF
+                        )
+                        pos += 6
+                        nb += 48
+                e = ac_fast[(acc >> (nb - fbits)) & fmask]
+                if e:
+                    nb -= e & 15
+                    v = e >> 8
+                    if v:
+                        k += (e >> 4) & 15
+                        if k > 63:
+                            raise NotImplementedError("JPEG: AC index overflow")
+                        put_i(base + k)
+                        put_v(v)
+                        k += 1
+                        continue
+                    if e & 0xF0:  # ZRL: 16 zeros
+                        k += 16
+                        continue
+                    break  # EOB
+                w16 = (acc >> (nb - 16)) & 0xFFFF
+                ln = ac_len[w16]
+                if ln == 0:
+                    raise NotImplementedError("JPEG: invalid Huffman code")
+                nb -= ln
+                rs = ac_sym[w16]
+                rrrr, ssss = rs >> 4, rs & 0x0F
+                if ssss == 0:
+                    if rrrr == 15:  # ZRL: 16 zeros
+                        k += 16
+                        continue
+                    break  # EOB
+                k += rrrr
+                if k > 63:
+                    raise NotImplementedError("JPEG: AC index overflow")
+                if nb < ssss:
+                    pos, acc, nb = _refill(d, pos, acc, nb)
+                nb -= ssss
+                v = (acc >> nb) & ((1 << ssss) - 1)
+                put_i(base + k)
+                put_v(v - (1 << ssss) + 1 if v < (1 << (ssss - 1)) else v)
+                k += 1
 
-    def decode_block(cid, tdc, tac, cstore, by, bx):
-        # _huff_decode/_extend/bits are inlined here (the only per-
-        # coefficient call sites of the sequential scan): the bodies
-        # are copied line for line — peek16's fill check + 16-bit LUT
-        # probe, EXTEND's two-branch sign mapping — so the consumed bit
-        # stream and the raised invalid-code error are unchanged
-        # (guide §1.2 per-task work; pinned by the codec fuzz suite).
-        zz = [0] * 64
-        dc_len, dc_sym = tdc.lut_len, tdc.lut_sym
-        ac_len, ac_sym = tac.lut_len, tac.lut_sym
-        if r.nbits < 16:
-            r._fill()
-        w16 = (r.acc >> (r.nbits - 16)) & 0xFFFF
-        t = dc_len[w16]
-        if t == 0:
-            raise NotImplementedError("JPEG: invalid Huffman code")
-        r.nbits -= t
-        t = dc_sym[w16]
-        if t:
-            if r.nbits < t:
-                r._fill()
-            r.nbits -= t
-            v = (r.acc >> r.nbits) & ((1 << t) - 1)
-            diff = v - (1 << t) + 1 if v < (1 << (t - 1)) else v
-        else:
-            diff = 0
-        if diff_frame:
-            zz[0] = diff
-        else:
-            pred[cid] += diff
-            zz[0] = pred[cid]
-        k = 1
-        while k < 64:
-            if r.nbits < 16:
-                r._fill()
-            w16 = (r.acc >> (r.nbits - 16)) & 0xFFFF
-            ln = ac_len[w16]
-            if ln == 0:
-                raise NotImplementedError("JPEG: invalid Huffman code")
-            r.nbits -= ln
-            rs = ac_sym[w16]
-            rrrr, ssss = rs >> 4, rs & 0x0F
-            if ssss == 0:
-                if rrrr == 15:  # ZRL: 16 zeros
-                    k += 16
-                    continue
-                break  # EOB
-            k += rrrr
-            if k > 63:
-                raise NotImplementedError("JPEG: AC index overflow")
-            if r.nbits < ssss:
-                r._fill()
-            r.nbits -= ssss
-            v = (r.acc >> r.nbits) & ((1 << ssss) - 1)
-            zz[k] = v - (1 << ssss) + 1 if v < (1 << (ssss - 1)) else v
-            k += 1
-        cstore[by, bx] = zz
-
-    n = 0  # MCUs since scan start (restart intervals count MCUs)
-    if len(scan) > 1:  # interleaved: MCU order over the padded grid
-        comps = frame["comps"]
-        hmax = max(c["h"] for c in comps)
-        vmax = max(c["v"] for c in comps)
-        mcus_x = -(-frame["w"] // (8 * hmax))
-        mcus_y = -(-frame["h"] // (8 * vmax))
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                if restart_interval and n and n % restart_interval == 0:
-                    r.restart()
-                    for cid in pred:
-                        pred[cid] = 0
-                for comp, _td, _ta in scan:
-                    cid = comp["id"]
-                    tdc, tac, cstore = resolved[cid]
-                    for by in range(comp["v"]):
-                        for bx in range(comp["h"]):
-                            decode_block(
-                                cid, tdc, tac, cstore,
-                                my * comp["v"] + by, mx * comp["h"] + bx,
-                            )
-                n += 1
-    else:
-        comp, _td, _ta = scan[0]
-        cid = comp["id"]
-        tdc, tac, cstore = resolved[cid]
-        bh, bw = _comp_blocks(frame, comp)
-        for by in range(bh):
-            for bx in range(bw):
-                if restart_interval and n and n % restart_interval == 0:
-                    r.restart()
-                    pred[cid] = 0
-                decode_block(cid, tdc, tac, cstore, by, bx)
-                n += 1
+    flat = np.zeros(int(offs[-1]), np.int32)
+    flat[idx] = vals
+    for j, cid in enumerate(ids):
+        gh, gw = grids[j]
+        store[cid][:gh, :gw] = flat[offs[j] : offs[j + 1]].reshape(gh, gw, 64)
 
 
 def _assemble(planes: dict, frame: dict) -> np.ndarray:

@@ -35,6 +35,7 @@ LDR/BGR read path does the same) or (h, w) when the image is gray.
 
 from __future__ import annotations
 
+import array
 import struct
 
 import numpy as np
@@ -72,13 +73,9 @@ class _LSBReader:
 
     def _fill(self, need: int) -> None:
         # bulk refill: grab 12 bytes at once (LSB-first == little-endian
-        # int.from_bytes) so the per-symbol read path refills every few
-        # symbols instead of byte-at-a-time — this was the hottest
-        # function of the VP8L decode (guide §1.2 per-task work; 12
-        # measured better than 6: half the refill calls outweigh the
-        # slightly wider int shifts). Past EOF the zero-pad loop
-        # reproduces the old behavior exactly (bytepos keeps advancing,
-        # virtual zero bytes).
+        # int.from_bytes). Past EOF, zero bytes are supplied and bytepos
+        # keeps advancing over them. The pixel loop of
+        # _decode_entropy_image refills the same way from its locals.
         d, bp, buf, n = self.d, self.bytepos, self.buf, self.n
         chunk = d[bp : bp + 12]
         if chunk:
@@ -102,21 +99,23 @@ class _LSBReader:
 class _Prefix:
     """Canonical prefix code (codes are MSB-first in the spec; against
     the LSB-first stream that makes the raw peeked value the
-    bit-reversed code, so a full-width LUT indexes directly on it)."""
+    bit-reversed code, so a full-width LUT indexes directly on it).
+    `lut[bits & mask]` is (symbol, code length). A single-symbol code
+    takes zero bits: a one-slot LUT with mask 0, so every read is the
+    same three steps. Code lengths that overflow the code space or
+    leave part of it unused are rejected, as libwebp does."""
 
     def __init__(self, lengths: list[int]) -> None:
         # canonical assignment: shorter codes first, ties by symbol
-        self.single: int | None = None
         nz = [(ln, sym) for sym, ln in enumerate(lengths) if ln > 0]
         if not nz:
             raise NotImplementedError("VP8L prefix code with no symbols")
         if len(nz) == 1:
-            self.single = nz[0][1]
+            self.max_len, self.mask, self.lut = 0, 0, [(nz[0][1], 0)]
             return
         max_len = max(ln for ln, _ in nz)
         if max_len > 15:
             raise NotImplementedError("VP8L prefix code deeper than 15")
-        self.max_len = max_len
         size = 1 << max_len
         lut = [None] * size
         code = 0
@@ -124,33 +123,26 @@ class _Prefix:
         for ln, sym in sorted(nz):
             code <<= ln - prev_len
             prev_len = ln
+            if code >> ln:
+                raise NotImplementedError("oversubscribed VP8L prefix code")
             rev = 0
             c = code
             for _ in range(ln):
                 rev = (rev << 1) | (c & 1)
                 c >>= 1
             step = 1 << ln
-            entry = (sym, ln)
             # strided slice assignment instead of a Python fill loop —
-            # deep tables fill thousands of slots per symbol; len(range)
-            # reproduces the old loop's slot set exactly (incl. the
-            # malformed-stream case where code overflow pushes rev past
-            # the table and fills nothing)
-            lut[rev::step] = [entry] * len(range(rev, size, step))
+            # deep tables fill thousands of slots per symbol
+            lut[rev::step] = [(sym, ln)] * len(range(rev, size, step))
             code += 1
-        # same completeness semantics as the old any()-scan, but as a
-        # C-level membership test instead of a per-slot genexpr
         if None in lut:
             raise NotImplementedError("incomplete VP8L prefix code")
-        self.lut = lut
+        self.max_len, self.mask, self.lut = max_len, size - 1, lut
 
     def read(self, br: _LSBReader) -> int:
-        if self.single is not None:
-            return self.single
-        k = self.max_len
-        if br.n < k:
-            br._fill(k)
-        sym, ln = self.lut[br.buf & ((1 << k) - 1)]
+        if br.n < self.max_len:
+            br._fill(self.max_len)
+        sym, ln = self.lut[br.buf & self.mask]
         br.buf >>= ln
         br.n -= ln
         return sym
@@ -203,18 +195,12 @@ def _read_prefix_code(br: _LSBReader, alphabet_size: int) -> _Prefix:
     return _Prefix(lengths)
 
 
-def _prefix_value(code: int, br: _LSBReader) -> int:
-    """LZ77 length/distance prefix range decode (spec §4.2.2)."""
-    if code < 4:
-        return code + 1
-    extra = (code - 2) >> 1
-    offset = (2 + (code & 1)) << extra
-    return offset + br.bits(extra) + 1
-
-
-# color-cache key = (0x1E35A7BD * argb) >> (32 - bits); inlined at both
-# insert sites in the per-pixel hot loop rather than kept as a helper —
-# a Python function call per pixel is measurable there
+# LZ77 length/distance prefix code → (base, extra bits): the value is
+# base + the next `extra` bits (spec §4.2.2)
+_PREFIX_RANGE = [
+    (c + 1, 0) if c < 4 else (((2 + (c & 1)) << ((c - 2) >> 1)) + 1, (c - 2) >> 1)
+    for c in range(40)
+]
 
 
 def _decode_entropy_image(br: _LSBReader, w: int, h: int,
@@ -235,9 +221,8 @@ def _decode_entropy_image(br: _LSBReader, w: int, h: int,
         meta_bits = br.bits(3) + 2
         mw = (w + (1 << meta_bits) - 1) >> meta_bits
         mh = (h + (1 << meta_bits) - 1) >> meta_bits
-        meta = _decode_entropy_image(br, mw, mh, level0=False)
-        groups = ((meta >> 8) & 0xFFFF).astype(np.int64)
-        meta = groups
+        groups = (_decode_entropy_image(br, mw, mh, level0=False) >> 8) & 0xFFFF
+        meta = groups.tolist()
         n_groups = int(groups.max()) + 1
     cache_size = (1 << cache_bits) if cache_bits else 0
     green_alpha = 256 + 24 + cache_size
@@ -247,108 +232,98 @@ def _decode_entropy_image(br: _LSBReader, w: int, h: int,
         r = _read_prefix_code(br, 256)
         b = _read_prefix_code(br, 256)
         a = _read_prefix_code(br, 256)
-        d = _read_prefix_code(br, 40)
-        codes.append((g, r, b, a, d))
+        dist = _read_prefix_code(br, 40)
+        # red, blue and alpha all single-symbol (gray and palette
+        # images): a literal is its green read OR one constant
+        const = None
+        if r.max_len == b.max_len == a.max_len == 0:
+            const = (a.lut[0][0] << 24) | (r.lut[0][0] << 16) | b.lut[0][0]
+        codes.append((g.lut, g.mask, r.lut, r.mask, b.lut, b.mask,
+                      a.lut, a.mask, dist.lut, dist.mask, const))
     cache = [0] * cache_size
-    out: list[int] = [0] * (w * h)
-    pos = 0
+    cache_shift = 32 - cache_bits
     total = w * h
-    cache_shift = 32 - cache_bits if cache_bits else 0
-    # Hot-loop form (guide §1.2 per-task work): each prefix code is
-    # pre-lowered to a (single, max_len, mask, lut) tuple and the read
-    # body is inlined at the use sites below — a literal pixel costs 4
-    # prefix reads, and the _Prefix.read call dispatch + attribute
-    # walks were the measured top of the VP8L profile. The inline body
-    # is read()'s, line for line (fill check, LUT index, shift), so
-    # the consumed bit stream is identical; the distance code keeps
-    # the method call (backrefs are ~1% of symbols here).
-    def _lower(p: _Prefix):
-        if p.single is not None:
-            return (p.single, 0, 0, None)
-        return (None, p.max_len, (1 << p.max_len) - 1, p.lut)
-
-    lowered = [
-        tuple(_lower(c) for c in grp_codes) for grp_codes in codes
-    ]
-    fill = br._fill
+    out: list[int] = [0] * total
+    block = 1 << meta_bits
+    # The pixel loop is serial prefix decoding, written for the fewest
+    # interpreted operations per symbol: the reader's state lives in
+    # locals (written back at the end, so the next sub-image continues
+    # from it); one refill check per symbol tops the buffer up to >= 60
+    # bits, enough for a whole literal (4 codes of <= 15 bits) or
+    # backref (15 + 10 + 15 + 18 bits); reads past the data get zero
+    # bits. The prefix-code group is looked up again only where the
+    # meta grid's block changes (a backref may run past that point).
+    d, bp, buf, n = br.d, br.bytepos, br.buf, br.n
+    pos = 0
     while pos < total:
-        if meta is not None:
-            x, y = pos % w, pos // w
-            gi = int(meta[y >> meta_bits, x >> meta_bits])
-            grp = codes[gi]
-            low = lowered[gi]
-        else:
+        if meta is None:
             grp = codes[0]
-            low = lowered[0]
-        gs, gk, gmask, glut = low[0]
-        if gs is not None:
-            s = gs
-        else:
-            if br.n < gk:
-                fill(gk)
-            s, ln = glut[br.buf & gmask]
-            br.buf >>= ln
-            br.n -= ln
-        if s < 256:
-            cs, ck, cmask, clut = low[1]
-            if cs is not None:
-                red = cs
-            else:
-                if br.n < ck:
-                    fill(ck)
-                red, ln = clut[br.buf & cmask]
-                br.buf >>= ln
-                br.n -= ln
-            cs, ck, cmask, clut = low[2]
-            if cs is not None:
-                blue = cs
-            else:
-                if br.n < ck:
-                    fill(ck)
-                blue, ln = clut[br.buf & cmask]
-                br.buf >>= ln
-                br.n -= ln
-            cs, ck, cmask, clut = low[3]
-            if cs is not None:
-                alpha = cs
-            else:
-                if br.n < ck:
-                    fill(ck)
-                alpha, ln = clut[br.buf & cmask]
-                br.buf >>= ln
-                br.n -= ln
-            px = (alpha << 24) | (red << 16) | (s << 8) | blue
-            out[pos] = px
-            pos += 1
-            if cache_size:
-                cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> cache_shift] = px
-        elif s < 280:  # LZ77 backward reference
-            length = _prefix_value(s - 256, br)
-            dist_code = _prefix_value(grp[4].read(br), br)
-            if dist_code > 120:
-                dist = dist_code - 120
-            else:
-                plane = _CODE_TO_PLANE[dist_code - 1]
-                yoff = plane >> 4
-                xoff = 8 - (plane & 0xF)
-                dist = max(1, yoff * w + xoff)
-            if dist > pos:
-                raise NotImplementedError("VP8L backref beyond start")
-            length = min(length, total - pos)
-            if dist >= length and not cache_size:
-                out[pos : pos + length] = out[pos - dist : pos - dist + length]
-                pos += length
-            else:
-                for _ in range(length):
-                    px = out[pos - dist]
-                    out[pos] = px
-                    pos += 1
-                    if cache_size:
+            end = total
+        else:  # decode up to the end of this meta block's row segment
+            y, x = divmod(pos, w)
+            grp = codes[meta[y >> meta_bits][x >> meta_bits]]
+            end = pos + min(block - (x & (block - 1)), w - x)
+        (glut, gmask, rlut, rmask, blut, bmask,
+         alut, amask, dlut, dmask, const) = grp
+        while pos < end:
+            if n < 60:
+                buf |= int.from_bytes(d[bp : bp + 12], "little") << n
+                n += 96
+                bp += 12
+            s, ln = glut[buf & gmask]
+            buf >>= ln
+            n -= ln
+            if s < 256:
+                if const is None:
+                    red, ln = rlut[buf & rmask]
+                    buf >>= ln
+                    blue, ln2 = blut[buf & bmask]
+                    buf >>= ln2
+                    alpha, ln3 = alut[buf & amask]
+                    buf >>= ln3
+                    n -= ln + ln2 + ln3
+                    px = (alpha << 24) | (red << 16) | (s << 8) | blue
+                else:
+                    px = const | (s << 8)
+                out[pos] = px
+                pos += 1
+                if cache_size:
+                    cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> cache_shift] = px
+            elif s < 280:  # LZ77 backward reference
+                length, k = _PREFIX_RANGE[s - 256]
+                length += buf & ((1 << k) - 1)
+                buf >>= k
+                s, ln = dlut[buf & dmask]
+                buf >>= ln
+                dist, k2 = _PREFIX_RANGE[s]
+                dist += buf & ((1 << k2) - 1)
+                buf >>= k2
+                n -= k + ln + k2
+                if dist > 120:
+                    dist -= 120
+                else:
+                    plane = _CODE_TO_PLANE[dist - 1]
+                    dist = max(1, (plane >> 4) * w + 8 - (plane & 0xF))
+                if dist > pos:
+                    raise NotImplementedError("VP8L backref beyond start")
+                length = min(length, total - pos)
+                src = pos - dist
+                if dist >= length:
+                    out[pos : pos + length] = out[src : src + length]
+                else:  # overlapping copy: the last `dist` pixels repeat
+                    out[pos : pos + length] = (
+                        out[src:pos] * (length // dist + 1)
+                    )[:length]
+                if cache_size:
+                    for px in out[pos : pos + length]:
                         cache[((0x1E35A7BD * px) & 0xFFFFFFFF) >> cache_shift] = px
-        else:  # color-cache reference
-            out[pos] = cache[s - 280]
-            pos += 1
-    return np.array(out, dtype=np.uint32).reshape(h, w)
+                pos += length
+            else:  # color-cache reference
+                out[pos] = cache[s - 280]
+                pos += 1
+    br.bytepos, br.buf, br.n = bp, buf, n
+    # via array.array: ~3x faster than np.array on a list of ints
+    return np.frombuffer(array.array("I", out), np.uintc).reshape(h, w)
 
 
 # ------------------------------------------------------- inverse transforms
@@ -481,7 +456,6 @@ def decode_vp8l(data: bytes) -> np.ndarray:
 
     transforms = []  # applied forward in stream order; invert in reverse
     xsize = w
-    palette = None
     while br.bits(1):
         ttype = br.bits(2)
         if ttype == 0:  # PREDICTOR
@@ -504,14 +478,15 @@ def decode_vp8l(data: bytes) -> np.ndarray:
             # palette entries are delta-coded component-wise
             pal = pal_img[0].astype(np.uint32)
             acc = np.zeros(4, dtype=np.uint32)
-            out_pal = np.zeros(n_colors, dtype=np.uint32)
+            # indices past the table give 0x00000000 (RFC 9649 §4.4;
+            # libwebp zero-fills the 256-entry map the same way)
+            out_pal = np.zeros(256, dtype=np.uint32)
             for i in range(n_colors):
                 e = int(pal[i])
                 comps = [(e >> s) & 0xFF for s in (24, 16, 8, 0)]
                 acc = (acc + comps) % 256
                 out_pal[i] = (int(acc[0]) << 24) | (int(acc[1]) << 16) | (
                     int(acc[2]) << 8) | int(acc[3])
-            palette = out_pal
             if n_colors <= 2:
                 pack_bits = 3
             elif n_colors <= 4:
@@ -544,8 +519,6 @@ def decode_vp8l(data: bytes) -> np.ndarray:
                     idx[:, cols[keep]] = (packed[:, keep] >> (i * ibits)) & mask
             else:
                 idx = img[:, :, 2].astype(np.int64)
-            if (idx >= len(aux)).any():
-                idx = np.clip(idx, 0, len(aux) - 1)  # spec: out-of-range → clamp behavior is undefined; clamp
             px = aux[idx]
             img = np.stack([
                 (px >> 24) & 0xFF, (px >> 16) & 0xFF,

@@ -125,6 +125,15 @@ def _streams() -> dict[str, bytes]:
         img, [{"kind": "lossless"}, {"kind": "lossless", "exp": (1, 1)}]
     )
 
+    # the entropy-loop paths the decode benchmark leans on: VP8L
+    # backrefs + color cache, VP8L color indexing, JPEG restart markers
+    out["vp8l_lz77_cache"] = encode_vp8l(
+        img, subtract_green=True, lz77=True, cache_bits=6
+    )
+    out["vp8l_palette"] = encode_vp8l((img >> 4) << 4, palette=True, lz77=True)
+    color = np.dstack([img, img[::-1], np.roll(img, 5, axis=1)])
+    out["jpeg_restart"] = encode_jpeg(color, subsample=True, restart_interval=2)
+
     out["tiff_lzw"] = write_tiff(
         [{"pixels": img, "compression": 5, "predictor": 2}]
     )

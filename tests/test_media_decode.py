@@ -749,6 +749,16 @@ def test_jpeg_restart_markers_and_odd_dims():
     assert int(np.abs(out.astype(int) - img.astype(int)).max()) <= 1
 
 
+def test_jpeg_oversubscribed_huffman_table_fails_loudly():
+    """A DHT with more codes than its lengths can hold (three 1-bit
+    codes) leaves a symbol unreachable; libjpeg rejects it
+    (JERR_BAD_HUFF_TABLE), and so does the decoder."""
+    from openocr_spark.kernels.jpeg_format import _HuffTable
+
+    with pytest.raises(NotImplementedError, match="oversubscribed"):
+        _HuffTable([3] + [0] * 15, b"\x01\x02\x03")
+
+
 def test_jpeg_differential_requires_hierarchy():
     """A differential SOF (SOF5/SOF7) with no preceding DHP segment is
     malformed per Annex J and fails loud rather than mis-decoding."""
@@ -1879,3 +1889,87 @@ def test_jpeg_arith_noninterleaved_sequential_scans():
                 rgb, qtable=[1] * 64, subsample=subsample,
             ))
             assert np.array_equal(a, b), (subsample, ri)
+
+
+def _pin_streams() -> dict:
+    """Name → (decoder, stream) for the entropy-decoder digest pins.
+    JPEG streams use the Annex K tables (long AC codes), VP8L streams
+    mix literals, backrefs and color-cache hits."""
+    from jpeg_hier_ref_encoder import encode_jpeg_hierarchical
+    from jpeg_ref_encoder import encode_jpeg
+    from tiff_ref_encoder import write_tiff
+    from webp_ref_encoder import encode_vp8l
+    from openocr_spark.kernels.jpeg_format import decode_jpeg
+    from openocr_spark.kernels.pdf_format import encode_pdf
+    from openocr_spark.kernels.webp_format import decode_webp
+
+    rng = np.random.default_rng(960)
+    gray = (_smooth(37, 53).astype(int)
+            + rng.integers(-12, 13, (37, 53))).clip(0, 255).astype(np.uint8)
+    rgb = (_smooth(29, 45, color=True).astype(int)
+           + rng.integers(-12, 13, (29, 45, 3))).clip(0, 255).astype(np.uint8)
+    tiles = rng.integers(0, 256, (6, 3)).astype(np.uint8)
+    patchy = tiles[rng.integers(0, 6, (9, 13))].repeat(3, 0).repeat(4, 1)
+    mh, mw = (27 + 7) >> 3, (52 + 7) >> 3
+    groups = (np.indices((mh, mw)).sum(axis=0) % 3).astype(np.int64)
+    base = encode_jpeg(gray)
+    vp8l = encode_vp8l(rgb, subtract_green=True, lz77=True, cache_bits=6)
+    return {
+        "jpeg_gray": (decode_jpeg, base),
+        "jpeg_420": (decode_jpeg, encode_jpeg(rgb, subsample=True)),
+        "jpeg_noninterleaved": (decode_jpeg, encode_jpeg(
+            rgb, subsample=True, noninterleaved=True)),
+        "jpeg_restart": (decode_jpeg, encode_jpeg(rgb, restart_interval=3)),
+        "jpeg_sof1": (decode_jpeg, encode_jpeg(gray, extended=True)),
+        "dct_pdf": (decode_bytes, encode_pdf([base])),
+        "tiff_jpeg": (decode_bytes, write_tiff([{
+            "pixels": gray, "compression": 7, "photometric": 1,
+            "jpeg_bytes": base, "jpeg_split_tables": True}])),
+        "jpeg_hier": (decode_jpeg, encode_jpeg_hierarchical(
+            gray, [{"kind": "dct"}, {"kind": "dct", "exp": (1, 1)}])),
+        "jpeg_truncated": (decode_jpeg, base[: len(base) * 2 // 3]),
+        "vp8l_lz77_cache": (decode_webp, vp8l),
+        "vp8l_palette": (decode_webp, encode_vp8l(
+            (gray >> 4) << 4, palette=True, lz77=True)),
+        "vp8l_meta_cache": (decode_webp, encode_vp8l(
+            patchy, cache_bits=4, lz77=True,
+            meta={"bits": 3, "groups": groups})),
+        "vp8l_truncated": (decode_webp, vp8l[: len(vp8l) * 3 // 5]),
+    }
+
+
+_PIN_DIGESTS = {
+    "dct_pdf": "76ce279d3cc694b1bede50f521ed8e8f",
+    "jpeg_420": "0b07df1f1729a7c88c94b84eccfee0f7",
+    "jpeg_gray": "76ce279d3cc694b1bede50f521ed8e8f",
+    "jpeg_hier": "a7afea2b367fec0ac1152c0015676d75",
+    "jpeg_noninterleaved": "0b07df1f1729a7c88c94b84eccfee0f7",
+    "jpeg_restart": "3f6b2d5a96446487e1a2874a7625db6c",
+    "jpeg_sof1": "76ce279d3cc694b1bede50f521ed8e8f",
+    "jpeg_truncated": "2e4312c272f10ed3b9a8c0b3230f938d",
+    "tiff_jpeg": "76ce279d3cc694b1bede50f521ed8e8f",
+    "vp8l_lz77_cache": "2ce17d26cad7736343efa1bc696c7d13",
+    "vp8l_meta_cache": "d5ae7ca7557646c9947f0d3b41c00587",
+    "vp8l_palette": "f061acc953fbe7a355e00a339eb2403d",
+    "vp8l_truncated": "2d8e57aeedcbd0db0470c4b9f90830aa",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PIN_DIGESTS))
+def test_entropy_decoders_pinned_pixels(name):
+    """md5 of the decoded pixels (shape, dtype and bytes of every page)
+    for the Huffman- and VP8L-coded containers, recorded before the
+    entropy loops were rewritten. decode_mix compares Spark against
+    this package's own decode_bytes, so only these pins see a codec
+    change that both paths share."""
+    import hashlib
+
+    decode, stream = _pin_streams()[name]
+    pages = decode(stream)
+    if isinstance(pages, np.ndarray):
+        pages = [pages]
+    h = hashlib.md5()
+    for p in pages:
+        h.update(f"{p.shape}{p.dtype}".encode())
+        h.update(np.ascontiguousarray(p).tobytes())
+    assert h.hexdigest() == _PIN_DIGESTS[name]

@@ -125,14 +125,39 @@ def test_palette_with_bundling(n_colors):
     rng = np.random.RandomState(50 + n_colors)
     pal = rng.randint(0, 256, (n_colors, 3)).astype(np.uint8)
     idx = rng.randint(0, n_colors, (11, 29))
-    _check(pal[idx])
+    _check(pal[idx], palette=True)
 
 
 def test_palette_width_not_multiple_of_bundle():
     rng = np.random.RandomState(60)
     pal = rng.randint(0, 256, (3, 3)).astype(np.uint8)
     idx = rng.randint(0, 3, (7, 13))  # 4px/byte bundling, 13 % 4 != 0
-    _check(pal[idx])
+    _check(pal[idx], palette=True)
+
+
+@pytest.mark.parametrize("n_colors,bad", [(3, 3), (20, 200)])
+def test_palette_index_past_table_is_zero(n_colors, bad):
+    """An index at or past the color table's size decodes to
+    0x00000000 (RFC 9649 §4.4), for bundled (2-bit) and plain indices."""
+    rng = np.random.RandomState(61)
+    table = [0xFF000000 | int(c) for c in rng.randint(1, 1 << 24, n_colors)]
+    idx = rng.randint(0, n_colors, (6, 11))
+    idx[2, 3:7] = bad
+    out = decode_webp(encode_vp8l(idx, color_table=table))
+    argb = np.array(table + [0] * (256 - n_colors), dtype=np.uint32)[idx]
+    want = np.stack([(argb >> s) & 0xFF for s in (16, 8, 0)], axis=2)
+    assert np.array_equal(out, want.astype(np.uint8))
+    assert not out[2, 3:7].any()
+
+
+def test_oversubscribed_prefix_code_fails_loudly():
+    """Code lengths whose canonical code overflows (three 1-bit codes)
+    leave a symbol unreachable; libwebp rejects them, and so does the
+    decoder instead of decoding junk."""
+    from openocr_spark.kernels.webp_format import _Prefix
+
+    with pytest.raises(NotImplementedError, match="oversubscribed"):
+        _Prefix([1, 1, 1])
 
 
 # --------------------------------------------------------------- container

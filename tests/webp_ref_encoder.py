@@ -471,6 +471,7 @@ def encode_vp8l(img: np.ndarray, *, cache_bits: int = 0, lz77: bool = False,
                 predictor: tuple[np.ndarray, int] | None = None,
                 color: tuple[int, int, int, int] | None = None,
                 palette: bool = False,
+                color_table: list[int] | None = None,
                 meta: dict | None = None,
                 use_repeats: bool = True,
                 use_max_symbol: bool = False,
@@ -480,7 +481,12 @@ def encode_vp8l(img: np.ndarray, *, cache_bits: int = 0, lz77: bool = False,
     predictor: (modes array of shape (ceil(h/b), ceil(w/b)), size_bits)
     color: (g2r, g2b, r2b, size_bits) uniform transform element
     meta: {'bits': n, 'groups': (mh, mw) int array} meta prefix groups
+    color_table: ARGB entries written as the color-indexing table; `img`
+    is then a 2-D array of indices into it, which may point past its end
     """
+    if color_table is not None:
+        indices = np.asarray(img, dtype=np.int64)
+        img = np.zeros(indices.shape + (3,), dtype=np.uint8)
     if img.ndim == 2:
         img = np.stack([img] * 3, axis=2)
     h, w0, _ = img.shape
@@ -527,12 +533,13 @@ def encode_vp8l(img: np.ndarray, *, cache_bits: int = 0, lz77: bool = False,
             (0xFF << 24) | (int(m) << 8) for m in modes.ravel()
         ]
         _write_image_stream(wtr, mode_pixels, bw, level0=False)
-    if palette:
-        flat = argb.ravel()
-        uniq = sorted(set(int(v) for v in flat))
+    if palette or color_table is not None:
+        if color_table is None:
+            uniq = sorted(set(int(v) for v in argb.ravel()))
+        else:
+            uniq = list(color_table)
         n_colors = len(uniq)
         assert n_colors <= 256
-        index_of = {v: i for i, v in enumerate(uniq)}
         wtr.write(1, 1)
         wtr.write(3, 2)
         wtr.write(n_colors - 1, 8)
@@ -554,7 +561,11 @@ def encode_vp8l(img: np.ndarray, *, cache_bits: int = 0, lz77: bool = False,
             pack_bits = 1
         else:
             pack_bits = 0
-        idx = np.vectorize(index_of.get)(argb)
+        if color_table is None:
+            index_of = {v: i for i, v in enumerate(uniq)}
+            idx = np.vectorize(index_of.get)(argb)
+        else:
+            idx = indices
         if pack_bits:
             per = 1 << pack_bits
             ibits = 8 >> pack_bits
