@@ -1,17 +1,25 @@
 #!/usr/bin/env python
-"""Benchmark harness. Prints ONE JSON line:
+"""Headline-suite benchmark. Prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ..., ...}
 
 Env:
-  SPARK_GRAFT_SF_DIR   testdata dir   (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[k]       (default 32)
-  BENCH_ONLY           comma list of query names to run (default: headline set)
-  BENCH_FIXTURE_DOCS   synthetic interleaved corpus size (default 20000)
-  SPARK_DRIVER_MEM     driver JVM heap (default 24g, capped at physical memory)
+  SPARK_GRAFT_SF_DIR    testdata dir   (default: the sf0.1 dataset)
+  SPARK_GRAFT_CPUS      local[k]       (default: the cores this process may use)
+  SPARK_DRIVER_MEM      driver JVM heap (default 24g, capped at physical memory)
+  BENCH_ONLY            comma list of query names to run (default: headline set)
+  BENCH_FIXTURE_DOCS    synthetic interleaved corpus size (default 30000)
+  BENCH_REALMEDIA_ROWS  encoded images in decode_real_media (default 20000)
+  BENCH_REPEAT          trials per query; each query reports its min (default 2)
+  BENCH_PLANS           if set, write each query's formatted plan to
+                        <BENCH_PLANS>/<query>.txt
 
-Each query is forced with a noop-format write (materializes every column,
-no driver collect). Progress goes to stderr; stdout carries only the JSON.
+Each trial is forced with a noop-format write (materializes every column,
+no driver collect) after a JVM GC and a 1 s settle. Generic queries are
+rebuilt inside every trial (some builders run jobs of their own); the
+extraction and decode legs force one prebuilt DataFrame. Corpora are
+materialized untimed under the temp dir and reused across runs.
+Progress goes to stderr; stdout carries only the JSON.
 """
 
 from __future__ import annotations
@@ -19,7 +27,9 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
+from collections import Counter
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
@@ -75,183 +85,93 @@ def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
-def _import_ref_encoders() -> dict:
-    """Best-effort per-module import of the independent test-side
-    encoders; absent modules map to None INDIVIDUALLY."""
-    wanted = [
-        ("jpeg_ref_encoder", "encode_jpeg"),
-        ("jpeg_arith_ref_encoder", "encode_jpeg_arith"),
-        ("jpeg_hier_ref_encoder", "encode_jpeg_hierarchical"),
-        ("tiff_ref_encoder", "write_tiff"),
-        ("webp_ref_encoder", "encode_vp8l"),
-    ]
-    out = {}
-    for mod, name in wanted:
-        try:
-            out[name] = getattr(__import__(mod), name)
-        except ImportError:
-            out[name] = None
-    return out
+def force(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
-def _build_real_media(spark, n_media: int, media_dir: str) -> None:
-    """Materialize (doc_id, media_ref, content) rows of REAL encoded
-    bytes. v6: the corpus is fully UNIQUE — every row synthesizes its
-    own gray image (sin/cos frequencies and phases derived from the row
-    id) and encodes it INSIDE the executor via mapInPandas (distributed
-    encode; no driver-side variant pool, no parquet dictionary
-    dedup). Ten containers assigned round-robin by id: PNG (package
-    encode_png), Flate-PDF page, baseline JPEG, JPEG-embedded-in-PDF
-    (/DCTDecode), ARITHMETIC-coded JPEG (SOF9), hierarchical JPEG (SOF5
-    pyramid), CCITT-G4 TIFF, abbreviated JPEG-in-TIFF, WebP lossless
-    (VP8L), and the VP8L palette path. Non-package encoders come from
-    the independent test-side encoders when the tests/ tree is present
-    (repo runs); else those slots fall back to PNG/Flate-PDF."""
+def _min_time(spark, run, repeat: int) -> float:
+    """Min wall time of `repeat` calls of `run`. Every trial starts after
+    a JVM GC and a 1 s settle: heavy predecessors (the near-dup candidate
+    joins especially) leave allocation debt in the shared local-mode JVM
+    that was measured to slow a successor up to ~2.5x, so every query is
+    timed under the same heap conditions."""
+    best = float("inf")
+    for _ in range(max(repeat, 1)):
+        spark._jvm.System.gc()
+        time.sleep(1.0)
+        t0 = time.monotonic()
+        run()
+        best = min(best, time.monotonic() - t0)
+    return best
+
+
+def _write_plan(df, plans_dir: str, name: str) -> None:
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    os.makedirs(plans_dir, exist_ok=True)
+    with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
+        f.write(df._jdf.queryExecution().explainString(mode.fromString("formatted")))
+
+
+def _parquet(spark, path: str, build):
+    """`path` read as parquet, written by `build()` first if missing."""
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        log(f"materializing {path}")
+        build().write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def _real_media(spark, n_media: int):
+    """`n_media` unique images encoded by perfbench's decode_mix
+    generator: image id i in container FORMATS[i % 10], encoded in the
+    executors by the independent test-side encoders. A missing encoder
+    fails the run, and the written corpus must sniff as the full mix."""
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+    import workloads as W
+
+    # the generator runs in the Python workers, which cannot import
+    # perfbench/ by name
+    cloudpickle.register_pickle_by_value(W)
     tests_dir = os.path.join(ROOT, "tests")
+    W.load_encoders(tests_dir)  # fail before the job
 
     def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        from openocr_spark.kernels.media_decode import encode_png
-        from openocr_spark.kernels.pdf_format import encode_pdf
-
-        if tests_dir not in sys.path:
-            sys.path.insert(0, tests_dir)
-        # import each test-side encoder independently — one absent
-        # module must not silently null the others (the PNG/PDF
-        # fallback would skew the mix with no visible signal)
-        fns = _import_ref_encoders()
-        encode_jpeg = fns["encode_jpeg"]
-        encode_jpeg_arith = fns["encode_jpeg_arith"]
-        encode_jpeg_hierarchical = fns["encode_jpeg_hierarchical"]
-        write_tiff = fns["write_tiff"]
-        encode_vp8l = fns["encode_vp8l"]
-
-        x, y = np.meshgrid(np.arange(160), np.arange(96))
-
-        def one(i: int) -> bytes:
-            # unique image per row id — integer-derived frequencies and
-            # phases so the corpus is deterministic yet repeat-free
-            fx = 3.0 + (i % 7) + 0.13 * ((i // 7) % 11)
-            fy = 2.0 + (i % 5) + 0.17 * ((i // 5) % 13)
-            px = (i * 37 % 640) / 10.0
-            py = (i * 73 % 640) / 10.0
-            img = (
-                (128 + 70 * np.sin((x + px) / fx) + 40 * np.cos((y + py) / fy))
-                .clip(0, 255)
-                .astype(np.uint8)
-            )
-            fmt = i % 10
-            if fmt == 2 and encode_jpeg is not None:
-                return encode_jpeg(img)
-            if fmt == 3 and encode_jpeg is not None:
-                return encode_pdf([encode_jpeg(img)])
-            if fmt == 4 and encode_jpeg_arith is not None:
-                return encode_jpeg_arith(img)
-            if fmt == 5 and encode_jpeg_hierarchical is not None:
-                # hierarchical pyramid: half-res DCT base + EXP +
-                # differential DCT refinement (SOF5). DCT-only plan keeps
-                # the leg a DECODE-throughput measure (the
-                # lossless-correction variant is pinned in pytest but its
-                # per-sample scan would dominate the timing here).
-                return encode_jpeg_hierarchical(
-                    img, [{"kind": "dct"}, {"kind": "dct", "exp": (1, 1)}]
-                )
-            if fmt == 6 and write_tiff is not None:
-                # CCITT G4 bilevel TIFF — the dominant scanned-page
-                # container in document corpora
-                return write_tiff([{"pixels": img > 128, "compression": 4}])
-            if fmt == 7 and write_tiff is not None and encode_jpeg is not None:
-                # abbreviated JPEG-in-TIFF (JPEGTables split)
-                return write_tiff([{
-                    "pixels": img, "compression": 7, "photometric": 1,
-                    "jpeg_bytes": encode_jpeg(img), "jpeg_split_tables": True,
-                }])
-            if fmt == 8 and encode_vp8l is not None:
-                # WebP lossless (subtract-green + LZ77 + color cache)
-                return encode_vp8l(img, subtract_green=True, lz77=True,
-                                   cache_bits=6)
-            if fmt == 9 and encode_vp8l is not None:
-                # WebP palette path (16-level quantize -> 4-bit bundling)
-                return encode_vp8l((img >> 4) << 4, palette=True, lz77=True)
-            if fmt % 2 == 0:
-                return encode_png(img)
-            return encode_pdf([img])
-
+        enc = W.load_encoders(tests_dir)
         for pdf in batches:
             ids = pdf["id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "doc_id": [f"doc-{i:08d}" for i in ids],
-                    "media_ref": [f"bench://{i}" for i in ids],
-                    "content": [one(i) for i in ids],
-                }
-            )
+            yield pd.DataFrame({
+                "doc_id": [f"doc-{i:08d}" for i in ids],
+                "media_ref": [f"bench://{i}" for i in ids],
+                "content": [W.encode_media(i, enc) for i in ids],
+            })
 
-    (
-        spark.range(n_media)
-        .repartition(64)
-        .mapInPandas(gen, "doc_id string, media_ref string, content binary")
-        .write.mode("overwrite")
-        .parquet(media_dir)
+    media = _parquet(
+        spark,
+        os.path.join(tempfile.gettempdir(),
+                     f"bench_realmedia_g{W.GEN_VERSION}_{n_media}"),
+        lambda: spark.range(0, n_media, 1, 64).mapInPandas(
+            gen, "doc_id string, media_ref string, content binary"),
     )
-    # record the mix that actually built this corpus (underscore-named
-    # sidecar — parquet readers ignore it); a missing test-side encoder
-    # degrades its slots to PNG/PDF, and the bench must SAY so instead
-    # of reporting the full mix over a silently different corpus.
-    # Ground truth comes from the WRITTEN bytes (one row per slot,
-    # magic-sniffed), not an import probe — encoding runs in the
-    # executors, whose environment may lack tests/ even when the
-    # driver has it.
-    probe = {
-        r["media_ref"]: bytes(r["content"])
-        for r in spark.read.parquet(media_dir)
-        .filter(F.col("media_ref").isin([f"bench://{i}" for i in range(10)]))
-        .collect()
-    }
-    slot_ok = {
-        2: probe.get("bench://2", b"").startswith(b"\xff\xd8"),
-        3: b"/DCTDecode" in probe.get("bench://3", b""),
-        4: probe.get("bench://4", b"").startswith(b"\xff\xd8"),
-        5: probe.get("bench://5", b"").startswith(b"\xff\xd8"),
-        6: probe.get("bench://6", b"").startswith(b"II*\x00"),
-        7: probe.get("bench://7", b"").startswith(b"II*\x00"),
-        8: probe.get("bench://8", b"").startswith(b"RIFF"),
-        9: probe.get("bench://9", b"").startswith(b"RIFF"),
-    }
-    slot_ok = {k: v for k, v in slot_ok.items() if k < n_media}
-    mix = "v6-unique-png-pdf-jpeg-dct-arith-hier-g4tiff-jpegtiff-vp8l-vp8lpal"
-    if not all(slot_ok.values()):
-        bad = ",".join(str(s) for s in sorted(k for k, ok in slot_ok.items()
-                                              if not ok))
-        mix += f"-DEGRADED(pngpdf-fallback-slots:{bad})"
-    with open(os.path.join(media_dir, "_MIX.json"), "w") as f:
-        json.dump({"mix": mix,
-                   "slots_encoded": {str(k): v for k, v in slot_ok.items()}},
-                  f)
-
-
-def force(df) -> int:
-    df.write.format("noop").mode("overwrite").save()
-    return 0
+    mix = Counter(media.select("content").rdd
+                  .map(lambda r: W.sniff(bytes(r[0]))).countByValue())
+    want = Counter(W.FORMATS[i % len(W.FORMATS)] for i in range(n_media))
+    if mix != want:
+        raise RuntimeError(f"degraded decode corpus: sniffed {dict(mix)}, "
+                           f"expected {dict(want)}")
+    return media, f"g{W.GEN_VERSION}-unique-" + "-".join(W.FORMATS)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     n_fixture = int(os.environ.get("BENCH_FIXTURE_DOCS", "30000"))
+    n_media = int(os.environ.get("BENCH_REALMEDIA_ROWS", "20000"))
     repeat = int(os.environ.get("BENCH_REPEAT", "2"))
+    plans_dir = os.environ.get("BENCH_PLANS")
     only = os.environ.get("BENCH_ONLY")
     names = only.split(",") if only else HEADLINE
-
-    if os.environ.get("BENCH_PIN_CPUS") == "1":
-        # pin the whole process tree (JVM + python workers) to `cpus`
-        # cores — honest executor simulation: a k-core executor runs its
-        # python workers on those same k cores, so local[8] can't borrow
-        # idle cores for kernel work when compared against local[32]
-        os.sched_setaffinity(0, set(range(cpus)))
-        log(f"pinned to cpus 0-{cpus - 1}")
 
     # local mode = one JVM for driver+executors; the joined-payload path
     # shuffles ~70KB payload rows, so give the JVM real headroom
@@ -260,7 +180,8 @@ def main() -> None:
                       shuffle_partitions=max(cpus * 2, 16))
     spark.sparkContext.setLogLevel("ERROR")
 
-    from openocr_spark.fixtures import documents_df
+    from openocr_spark.fixtures import documents_df, media_payloads_df
+    from openocr_spark.kernels.media_decode import decode_media, extract_features
     from openocr_spark.operators.extract import extract
 
     # warmup: spin up the Python worker pool + Arrow + codegen once, so
@@ -280,143 +201,72 @@ def main() -> None:
         ensure_ivf_cells(spark, sf_dir)
         log(f"ivf cell layout ready ({time.monotonic() - t0:.2f}s, cached)")
 
+    # the extraction legs read the synthetic interleaved corpus from
+    # parquet (the north metric is extraction throughput over an
+    # Iceberg-style table, not corpus generation)
+    corpus = os.path.join(tempfile.gettempdir(), f"bench_corpus_{n_fixture}")
+
+    def docs():
+        return _parquet(spark, corpus, lambda: documents_df(spark, n_fixture))
+
     timings: dict[str, float] = {}
-    extras: dict[str, float] = {}
+    extras: dict = {}
     joined_df = None  # bellwether re-measure handle (extract_joined)
 
     for name in names:
-        # Untimed heap settle before EVERY timed query (ADVICE r4 item
-        # 1): heavy predecessors (the near-dup candidate joins
-        # especially) leave allocation debt in the shared local-mode JVM
-        # that was measured to slow a successor up to ~2.5×. Settling
-        # only before the extraction block (the r4 protocol) gave the
-        # headline queries a clean heap the rest of the suite didn't
-        # get; settling uniformly measures every query under identical
-        # heap conditions. Protocol note in BENCH/BASELINE.md.
-        spark._jvm.System.gc()
-        time.sleep(1.0)
-        t0 = time.monotonic()
         if name == "extract_fixture":
-            # materialize the synthetic interleaved corpus to parquet
-            # UNTIMED (the north metric is extraction throughput over an
-            # Iceberg-style table, not corpus generation), then time the
-            # extraction job reading from the table
-            corpus = os.path.join(
-                os.environ.get("TMPDIR", "/tmp"), f"bench_corpus_{n_fixture}"
-            )
-            if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
-                log(f"materializing corpus {n_fixture} docs -> {corpus}")
-                documents_df(spark, n_fixture).write.mode("overwrite").parquet(corpus)
-            docs = spark.read.parquet(corpus)
-            out = extract(docs)
-            dt = None
-            for _ in range(max(repeat, 1)):
-                t0 = time.monotonic()
-                force(out)
-                run = time.monotonic() - t0
-                dt = run if dt is None else min(dt, run)
-                log(f"extract_fixture trial: {run:.2f}s")
-            n_spans = int(
-                out.select(F.sum(F.size("spans")).alias("s")).collect()[0]["s"]
-            )
+            df = extract(docs())
+        elif name == "extract_joined":
+            # the production mode: payloads resolved via the media_ref
+            # equi-join against a materialized table (storage-partitioned
+            # at Iceberg scale) instead of executor-side synthesis
+            payloads = _parquet(spark, corpus + "_payloads_u8",
+                                lambda: media_payloads_df(spark, docs()))
+            df = joined_df = extract(docs(), payloads)
+        elif name == "decode_real_media":
+            # real encoded bytes through the distributed decode_media
+            # 1→N page explode + per-page feature stats
+            media, mix = _real_media(spark, n_media)
+            df = extract_features(decode_media(media))
+        elif name in SPARK_Q:
+            df = None
+        else:
+            log(f"skip unknown query {name}")
+            continue
+        if plans_dir:
+            plan_df = SPARK_Q[name](spark, sf_dir) if df is None else df
+            _write_plan(plan_df, plans_dir, name)
+        if df is None:
+            dt = _min_time(spark, lambda: force(SPARK_Q[name](spark, sf_dir)), repeat)
+        else:
+            dt = _min_time(spark, lambda: force(df), repeat)
+        timings[name] = round(dt, 3)
+        log(f"{name}: {dt:.2f}s")
+        if name == "extract_fixture":
+            n_spans = int(df.select(F.sum(F.size("spans"))).collect()[0][0])
             extras["fixture_docs"] = float(n_fixture)
             extras["fixture_spans"] = float(n_spans)
             extras["docs_per_sec"] = round(n_fixture / dt, 2)
             extras["spans_per_sec"] = round(n_spans / dt, 2)
         elif name == "extract_joined":
-            # the production mode: payloads resolved via the media_ref
-            # equi-join against a materialized table (storage-partitioned
-            # at Iceberg scale) instead of executor-side synthesis
-            corpus = os.path.join(
-                os.environ.get("TMPDIR", "/tmp"), f"bench_corpus_{n_fixture}"
-            )
-            payloads_dir = corpus + "_payloads_u8"
-            docs = spark.read.parquet(corpus)
-            if not os.path.exists(os.path.join(payloads_dir, "_SUCCESS")):
-                log(f"materializing payloads -> {payloads_dir}")
-                from openocr_spark.fixtures import media_payloads_df
-
-                media_payloads_df(spark, docs).write.mode("overwrite").parquet(
-                    payloads_dir
-                )
-            payloads = spark.read.parquet(payloads_dir)
-            out = extract(docs, payloads)
-            joined_df = out
-            dt = None
-            for _ in range(max(repeat, 1)):
-                t0 = time.monotonic()
-                force(out)
-                run = time.monotonic() - t0
-                dt = run if dt is None else min(dt, run)
-                log(f"extract_joined trial: {run:.2f}s")
             extras["docs_per_sec_joined"] = round(n_fixture / dt, 2)
         elif name == "decode_real_media":
-            # real encoded bytes through decode_media →
-            # extract_features. The payload table is materialized
-            # UNTIMED (fully-unique images, distributed encode — see
-            # _build_real_media), then the timed job is the distributed
-            # decode + 1→N page explode + per-page feature stats.
-            n_media = int(os.environ.get("BENCH_REALMEDIA_ROWS", "20000"))
-            # v6: fully-unique corpus — every row encodes its own
-            # image in the executors (the v5 mix plus uniqueness); the
-            # version suffix invalidates stale caches from older mixes
-            media_dir = os.path.join(
-                os.environ.get("TMPDIR", "/tmp"),
-                f"bench_realmedia_v6_{n_media}",
-            )
-            if not os.path.exists(os.path.join(media_dir, "_SUCCESS")):
-                log(f"materializing {n_media} real-media rows -> {media_dir}")
-                _build_real_media(spark, n_media, media_dir)
-            from openocr_spark.kernels.media_decode import (
-                decode_media,
-                extract_features,
-            )
-
-            mdf = spark.read.parquet(media_dir)
-            out = extract_features(decode_media(mdf))
-            dt = None
-            for _ in range(max(repeat, 1)):
-                t0 = time.monotonic()
-                force(out)
-                run = time.monotonic() - t0
-                dt = run if dt is None else min(dt, run)
-                log(f"decode_real_media trial: {run:.2f}s")
-            n_pages = out.count()
+            n_pages = df.count()
             extras["realmedia_rows"] = float(n_media)
             extras["realmedia_pages"] = float(n_pages)
-            try:
-                with open(os.path.join(media_dir, "_MIX.json")) as f:
-                    extras["realmedia_mix"] = json.load(f)["mix"]
-            except OSError:  # corpus cached by a pre-sidecar build
-                extras["realmedia_mix"] = "v6-unique-unrecorded"
+            extras["realmedia_mix"] = mix
             extras["media_per_sec"] = round(n_media / dt, 2)
             extras["pages_per_sec"] = round(n_pages / dt, 2)
-        elif name in SPARK_Q:
-            force(SPARK_Q[name](spark, sf_dir))
-            dt = time.monotonic() - t0
-        else:
-            log(f"skip unknown query {name}")
-            continue
-        timings[name] = round(dt, 3)
-        log(f"{name}: {dt:.2f}s")
 
     # Bellwether self-describing noise check (VERDICT r5 item 4): the
     # joined leg has a documented ~4× host-window swing on identical
-    # code. After the suite finishes (heap settled, no co-running
-    # stages), re-measure it min-of-3; if the in-suite reading was >1.5×
-    # the settled min, the artifact records BOTH numbers and derives the
-    # throughput from the settled min — so a grader reading the JSON
-    # sees the window noise instead of a phantom regression.
-    if "extract_joined" in timings and joined_df is not None:
-        out = joined_df
-        spark._jvm.System.gc()
-        time.sleep(1.0)
-        solo = None
-        for _ in range(3):
-            t0 = time.monotonic()
-            force(out)
-            run = time.monotonic() - t0
-            solo = run if solo is None else min(solo, run)
+    # code. After the suite finishes (no co-running stages), re-measure
+    # it min-of-3; if the in-suite reading was >1.5× the settled min,
+    # the artifact records BOTH numbers and derives the throughput from
+    # the settled min — so a grader reading the JSON sees the window
+    # noise instead of a phantom regression.
+    if joined_df is not None:
+        solo = _min_time(spark, lambda: force(joined_df), 3)
         extras["extract_joined_insuite"] = timings["extract_joined"]
         extras["extract_joined_settled_min"] = round(solo, 3)
         if timings["extract_joined"] > 1.5 * solo:

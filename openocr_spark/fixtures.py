@@ -87,7 +87,7 @@ def payload_for_media_ref(media_ref: str, with_logits: bool = True) -> dict:
     n_regions = int(rng.integers(1, 6))
     cells = rng.permutation(_GRID_ROWS * _GRID_COLS)[:n_regions]
     # probability levels sit EXACTLY on the k/255 grid (float32
-    # division, mirrored by extract._prob_from_buffer), so the uint8
+    # division, mirrored by detection.as_prob), so the uint8
     # payload storage format round-trips bit-losslessly and the
     # synthesized and joined payload paths stay bit-identical.
     # 13/255≈0.051 background, 64/255≈0.251 weak, 230/255≈0.902 strong

@@ -46,7 +46,6 @@ from pyspark.sql import functions as F
 from openocr_spark import schemas
 from openocr_spark.config import DEFAULT_CONFIG, ExtractConfig
 from openocr_spark.kernels.detection import (
-    as_prob,
     detect_batch,
     first_region_inside,
     reading_order,
@@ -239,7 +238,8 @@ def _detect_rows(
     (quads, scores, rows), where rows[i] is (the indices into quads of
     row i's boxes in reading order, per box the row-local index of the
     region whose logits it reads, -1 if none — the crop-step
-    surrogate). Ordering and lookup run per row on plain lists."""
+    surrogate). Ordering and lookup run per row on plain lists. Shared
+    by the extraction kernel and `metrics.extract_detail`."""
     box_off, quads, scores = detect_batch(
         probs,
         thresh=cfg.binarize_thresh,
@@ -261,21 +261,6 @@ def _detect_rows(
     return quads, scores, rows
 
 
-def detect_in_reading_order(
-    prob: np.ndarray, regions: list[dict], cfg: ExtractConfig
-) -> tuple[list[np.ndarray], list[float], list[int]]:
-    """detect → reading order → region lookup, shared by the extraction
-    kernel and `metrics.extract_detail`: the detected boxes in reading
-    order, their detection scores, and per box the index of the region
-    whose logits it reads (-1 if none; the crop-step surrogate). A
-    one-item call of the batch flow."""
-    quads, scores, rows = _detect_rows(
-        [prob], [0, len(regions)], _centers([regions]), cfg
-    )
-    idx, assigned = rows[0]
-    return [quads[j] for j in idx], [float(scores[j]) for j in idx], assigned
-
-
 def _extract_texts(mb: MediaBatch, cfg: ExtractConfig, decode) -> list[str]:
     """Per-row kernel flow over a whole batch: detect → reading order →
     recognize → filter → newline-join (infer_e2e.py:155-218
@@ -294,18 +279,6 @@ def _extract_texts(mb: MediaBatch, cfg: ExtractConfig, decode) -> list[str]:
     ]
 
 
-def _process_media_arrays(
-    prob: np.ndarray, regions: list[dict], cfg: ExtractConfig, decode=None
-) -> str:
-    """Per-media kernel flow, a one-item call of `_extract_texts`.
-    `decode` is the resolved batch decoder — the kernel resolves it ONCE
-    at closure-build time (driver side, so a bad cfg.rec_head fails
-    before any job launches); None resolves here for direct callers."""
-    if decode is None:
-        decode = _decode_fn(cfg.rec_head, cfg.token_map)
-    return _extract_texts(_media_batch([prob], [regions]), cfg, decode)[0]
-
-
 def _score_map(cell: np.ndarray, h: int, w: int) -> np.ndarray:
     """A score-map payload cell (uint8 bytes) as a 2-D view, dtype
     sniffed from its length: h·w·4 bytes = float32; h·w bytes = uint8
@@ -321,11 +294,6 @@ def _score_map(cell: np.ndarray, h: int, w: int) -> np.ndarray:
         f"score_map payload of {len(cell)} bytes matches neither "
         f"float32 ({h * w * 4}) nor uint8 ({h * w}) for shape {h}x{w}"
     )
-
-
-def _prob_from_buffer(buf, h: int, w: int) -> np.ndarray:
-    """Decode one score-map payload cell to float32 probabilities."""
-    return as_prob(_score_map(np.frombuffer(buf, dtype=np.uint8), h, w))
 
 
 def _logits_block(data: np.ndarray, byte_off: np.ndarray, ts: np.ndarray) -> np.ndarray:
@@ -360,11 +328,6 @@ def _logits_block(data: np.ndarray, byte_off: np.ndarray, ts: np.ndarray) -> np.
     out[row16] = raw[byte16].view(np.float16).reshape(-1, NUM_CLASSES)
     out[~row16] = raw[~byte16].view(np.float32).reshape(-1, NUM_CLASSES)
     return out
-
-
-def _logits_from_buffer(buf, t: int) -> np.ndarray:
-    """Decode one logits payload cell of t timesteps to float32 [t, C]."""
-    return _logits_block(np.frombuffer(buf, dtype=np.uint8), [0, len(buf)], [t])
 
 
 def _binary_cells(col) -> tuple[np.ndarray, np.ndarray]:

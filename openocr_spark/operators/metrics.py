@@ -618,32 +618,39 @@ def extract_detail(
 ) -> DataFrame:
     """Per-detected-region detail rows (DET_REC_DETAIL) from synthesized
     payloads — the system_results.txt row shape
-    (infer_e2e.py:272-276). Input: df with a media_ref column."""
+    (infer_e2e.py:272-276). Input: df with a media_ref column. Each
+    batch runs the extraction kernel's flow (one detect → assign pass,
+    every region decoded by cfg.rec_head's batch decoder) and emits one
+    row per detected box."""
     from openocr_spark.fixtures import payload_for_media_ref
-    from openocr_spark.kernels.recognition import ctc_greedy_decode
-    from openocr_spark.operators.extract import detect_in_reading_order
+    from openocr_spark.operators.extract import _decode_fn, _detect_rows, _media_batch
+
+    decode = _decode_fn(cfg.rec_head, cfg.token_map)  # driver-side fail-fast
 
     def kernel(batches):
         for pdf in batches:
+            refs = pdf["media_ref"].tolist()
+            ps = [payload_for_media_ref(ref) for ref in refs]
+            mb = _media_batch([p["score_map"] for p in ps], [p["regions"] for p in ps])
+            quads, det_scores, per_row = _detect_rows(
+                mb.probs, mb.reg_off, mb.centers, cfg
+            )
+            texts, rec_scores = decode(mb.logits, mb.t_off)
             rows = []
-            for ref in pdf["media_ref"].tolist():
-                p = payload_for_media_ref(ref)
-                boxes, scores, assigned = detect_in_reading_order(
-                    p["score_map"], p["regions"], cfg
-                )
-                for idx, (box, det_score, ridx) in enumerate(
-                    zip(boxes, scores, assigned)
-                ):
+            for ref, p, (boxes, assigned), r0 in zip(
+                refs, ps, per_row, mb.reg_off.tolist()
+            ):
+                for idx, (b, ridx) in enumerate(zip(boxes, assigned)):
                     text, rscore, gt_text = ("", 0.0, None)
                     if ridx >= 0:
-                        text, rscore = ctc_greedy_decode(p["regions"][ridx]["logits"])
+                        text, rscore = texts[r0 + ridx], rec_scores[r0 + ridx]
                         gt_text = p["regions"][ridx]["gt_text"]
                     rows.append(
                         {
                             "media_ref": ref,
                             "region_idx": idx,
-                            "points": [[int(x), int(y)] for x, y in box],
-                            "det_score": float(det_score),
+                            "points": quads[b].tolist(),
+                            "det_score": float(det_scores[b]),
                             "transcription": text,
                             "rec_score": float(rscore),
                             "gt_text": gt_text,
@@ -659,52 +666,6 @@ def extract_detail(
 
     return media_refs.select("media_ref").mapInPandas(
         kernel, schema=schemas.DET_REC_DETAIL
-    )
-
-
-def latency_profile(
-    media_refs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """Per-media kernel latency instrumentation (SURVEY A10 — the
-    reference logs per-image elapse and prints a latency profile,
-    tools/infer_e2e.py timing): wall-time the detect+recognize kernel
-    per payload inside the executor, emit (media_ref, n_regions,
-    elapsed_us), then aggregate driver-side with percentile_approx by
-    region count. Timing is inherently nondeterministic → test-pinned
-    invariants only (positive, monotone-ish in n_regions), no SQL
-    oracle."""
-    import time
-
-    from openocr_spark.fixtures import payload_for_media_ref
-    from openocr_spark.operators.extract import _process_media_arrays
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for ref in pdf["media_ref"].tolist():
-                p = payload_for_media_ref(ref)
-                t0 = time.perf_counter_ns()
-                _process_media_arrays(p["score_map"], p["regions"], cfg)
-                dt = (time.perf_counter_ns() - t0) // 1000
-                rows.append(
-                    {
-                        "media_ref": ref,
-                        "n_regions": len(p["regions"]),
-                        "elapsed_us": int(dt),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "n_regions", "elapsed_us"]
-            )
-
-    detail = media_refs.select("media_ref").mapInPandas(
-        kernel, schema="media_ref string, n_regions int, elapsed_us long"
-    )
-    return detail.groupBy("n_regions").agg(
-        F.count("*").alias("n_media"),
-        F.percentile_approx("elapsed_us", 0.5).alias("p50_us"),
-        F.percentile_approx("elapsed_us", 0.99).alias("p99_us"),
-        F.round(F.avg("elapsed_us"), 1).alias("mean_us"),
     )
 
 

@@ -59,9 +59,9 @@ EXTRACTIONS = T.StructType(
 # opendet/modeling/heads/db_head.py output), serialized as uint8
 # (prob*255 — the default lossless narrow format payload_row writes;
 # legacy float32[h,w] buffers also decode — the reader length-sniffs
-# via extract._prob_from_buffer); region logits are per-GT-region CTC
+# via extract._score_map); region logits are per-GT-region CTC
 # logit matrices [T, NUM_CLASSES] (float16 when losslessly
-# representable, else float32 — sniffed by extract._logits_from_buffer,
+# representable, else float32 — sniffed by extract._logits_block,
 # serialized), analogous to the recognizer head output
 # (openrec/modeling/base_recognizer.py).
 REGION = T.StructType(

@@ -132,13 +132,15 @@ def test_uint8_payload_roundtrip_bitexact(spark):
     import numpy as np
 
     from openocr_spark.fixtures import payload_for_media_ref, payload_row
-    from openocr_spark.operators.extract import _prob_from_buffer
+    from openocr_spark.kernels.detection import as_prob
+    from openocr_spark.operators.extract import _score_map
 
     for i in range(20):
         ref = f"media://u8check/{i}"
         want = payload_for_media_ref(ref)["score_map"]
         row = payload_row(ref)
-        got = _prob_from_buffer(row["score_map"], row["height"], row["width"])
+        got = as_prob(_score_map(
+            np.frombuffer(row["score_map"], np.uint8), row["height"], row["width"]))
         assert got.dtype == np.float32
         assert np.array_equal(got, want), ref
         # and it really is the narrow format
@@ -151,11 +153,12 @@ def test_float32_payload_tables_still_decode(spark):
     import numpy as np
 
     from openocr_spark.fixtures import payload_for_media_ref
-    from openocr_spark.operators.extract import _prob_from_buffer
+    from openocr_spark.kernels.detection import as_prob
+    from openocr_spark.operators.extract import _score_map
 
     p = payload_for_media_ref("media://f32check/0")
     buf = p["score_map"].tobytes()
-    got = _prob_from_buffer(buf, p["height"], p["width"])
+    got = as_prob(_score_map(np.frombuffer(buf, np.uint8), p["height"], p["width"]))
     assert np.array_equal(got, p["score_map"])
 
 
@@ -168,7 +171,10 @@ def test_float16_logits_roundtrip_bitexact(spark):
 
     from openocr_spark.config import NUM_CLASSES
     from openocr_spark.fixtures import payload_for_media_ref, payload_row
-    from openocr_spark.operators.extract import _logits_from_buffer
+    from openocr_spark.operators.extract import _logits_block
+
+    def decode(buf, t):
+        return _logits_block(np.frombuffer(buf, np.uint8), [0, len(buf)], [t])
 
     for i in range(10):
         ref = f"media://f16check/{i}"
@@ -177,13 +183,13 @@ def test_float16_logits_roundtrip_bitexact(spark):
         for want, got_r in zip(p["regions"], row["regions"]):
             t = int(want["logits"].shape[0])
             assert len(got_r["logits"]) == t * NUM_CLASSES * 2  # narrow
-            got = _logits_from_buffer(got_r["logits"], t)
+            got = decode(got_r["logits"], t)
             assert got.dtype == np.float32
             assert np.array_equal(got, want["logits"])
     # float32 fallback path still decodes
     lg = np.full((3, NUM_CLASSES), 0.1, dtype=np.float32)  # 0.1 not f16-exact
     buf = lg.tobytes()
-    assert np.array_equal(_logits_from_buffer(buf, 3), lg)
+    assert np.array_equal(decode(buf, 3), lg)
 
 
 def test_rec_head_dispatch_covers_every_implemented_head():
@@ -240,7 +246,8 @@ def test_tokenizer_head_end_to_end_with_artifact(spark, tmp_path):
     from openocr_spark.kernels.tokenizer import load_token_map, token_map_json
     from openocr_spark.operators.extract import (
         _decode_fn,
-        _process_media_arrays,
+        _extract_texts,
+        _media_batch,
         extract,
     )
 
@@ -262,12 +269,13 @@ def test_tokenizer_head_end_to_end_with_artifact(spark, tmp_path):
     # eager oracle: same payloads, direct kernel flow on the driver
     for (doc_id, ref), got in media.items():
         p = payload_for_media_ref(ref)
-        want = _process_media_arrays(
-            np.asarray(p["score_map"], dtype=np.float32),
-            p["regions"],
+        want = _extract_texts(
+            _media_batch(
+                [np.asarray(p["score_map"], dtype=np.float32)], [p["regions"]]
+            ),
             cfg,
-            decode=_decode_fn("unirec", tm),
-        )
+            _decode_fn("unirec", tm),
+        )[0]
         assert got == want, (doc_id, ref)
     # the unirec cleaning actually fired: no raw byte-level markers or
     # chat specials survive in the output — and the output is NONEMPTY:

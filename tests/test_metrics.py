@@ -156,20 +156,32 @@ def test_fixture_rec_eval(spark, fixture_refs):
     assert m["one_minus_ned"] == 1.0
 
 
-def test_latency_profile_shape_and_positive(spark):
-    """A10: per-region-count kernel latency percentiles — timing values
-    are nondeterministic, so the pins are structural: every fixture
-    region count 1..5 appears, all latencies positive, p99 >= p50."""
-    from openocr_spark.operators.metrics import latency_profile
+def test_extract_detail_decodes_with_configured_rec_head(spark, fixture_refs):
+    """extract_detail honours cfg.rec_head: under "nrtr" every
+    transcription is the nrtr decode of the logits of the region its box
+    is assigned to (the region whose centre the box contains)."""
+    from openocr_spark.config import ExtractConfig
+    from openocr_spark.fixtures import payload_for_media_ref
+    from openocr_spark.kernels.detection import assign_regions_to_boxes
+    from openocr_spark.operators.extract import _decode_fn
 
-    refs = spark.createDataFrame(
-        [(f"media://lat/{i}",) for i in range(60)], "media_ref string"
-    )
-    rows = {r["n_regions"]: r for r in latency_profile(refs).collect()}
-    assert set(rows) <= set(range(1, 6)) and len(rows) >= 3
-    for r in rows.values():
-        assert r["p50_us"] > 0 and r["p99_us"] >= r["p50_us"]
-        assert r["n_media"] > 0
+    nrtr = _decode_fn("nrtr")
+    rows = extract_detail(fixture_refs, ExtractConfig(rec_head="nrtr")).collect()
+    n_assigned = 0
+    for r in rows:
+        regions = payload_for_media_ref(r["media_ref"])["regions"]
+        (ridx,) = assign_regions_to_boxes(
+            [np.array(r["points"])], [g["points"] for g in regions]
+        )
+        if ridx < 0:
+            assert r["transcription"] == "" and r["gt_text"] is None
+            continue
+        n_assigned += 1
+        logits = regions[ridx]["logits"]
+        (want,), _ = nrtr(logits, np.array([0, len(logits)]))
+        assert r["transcription"] == want, (r["media_ref"], r["region_idx"])
+        assert r["gt_text"] == regions[ridx]["gt_text"]
+    assert n_assigned > 0
 
 
 def test_det_matching_deterministic_under_gt_shuffle(spark):
