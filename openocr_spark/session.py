@@ -3,38 +3,54 @@
 Defaults chosen for the 100 TB design point, scaled down to local[k]:
 AQE on (runtime coalesce + skew-join splitting), Arrow on for pandas
 UDF kernels with a bounded batch size so kernel memory is predictable
-(SURVEY.md §4 O4/O11).
+(SURVEY.md §4 O4/O11). Without `master`, the session runs
+local[$SPARK_GRAFT_CPUS], default the cores this process may use.
+
+The package ships to Python workers as a zip (`package_zip`,
+`addPyFile`). When the package is a directory on disk, the workers also
+run under `worker_daemon`, which stops each task from re-reading every
+zip on the worker's `sys.path`; a driver that imports the package from
+a zip (the spark-submit `--py-files` deploy) keeps Spark's own daemon,
+since the daemon starts before any zip is shipped.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
 def package_zip() -> str:
     """Zip the openocr_spark package for --py-files shipment. Used both
     by get_spark (sc.addPyFile → workers get the module even when the
     driver runs outside the repo) and by spark-submit deployments."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
     out = os.path.join(tempfile.gettempdir(), "openocr_spark_pyfiles.zip")
-    tmp = out + ".tmp"
-    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.join(
-                        "openocr_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
-    shutil.move(tmp, out)
+    # a private temp file per call: concurrent sessions sharing the temp
+    # dir never write into one file, and each zip gets a new inode
+    fd, tmp = tempfile.mkstemp(suffix=".tmp", dir=os.path.dirname(out))
+    try:
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(
+            f, "w", zipfile.ZIP_DEFLATED
+        ) as zf:
+            for root, _dirs, files in os.walk(_PKG_DIR):
+                if "__pycache__" in root:
+                    continue
+                for name in files:
+                    if name.endswith(".py"):
+                        full = os.path.join(root, name)
+                        rel = os.path.join(
+                            "openocr_spark", os.path.relpath(full, _PKG_DIR)
+                        )
+                        zf.write(full, rel)
+        os.replace(tmp, out)
+    except BaseException:
+        os.unlink(tmp)
+        raise
     return out
 
 
@@ -44,7 +60,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     b = (
@@ -59,7 +75,7 @@ def get_spark(
         # to tmp, never the repo cwd
         .config(
             "spark.sql.warehouse.dir",
-            os.path.join(os.environ.get("TMPDIR", "/tmp"), "openocr_warehouse"),
+            os.path.join(tempfile.gettempdir(), "openocr_warehouse"),
         )
         # kernel batch size: the batch extraction kernel processes a whole
         # Arrow batch at once, so its working set (mask stack, logits
@@ -74,7 +90,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # the daemon module must be importable from disk when the JVM starts
+    # it, before addPyFile below ships the zip
+    if os.path.isfile(os.path.join(_PKG_DIR, "worker_daemon.py")):
+        conf["spark.python.daemon.module"] = "openocr_spark.worker_daemon"
+        paths = [conf.get("spark.executorEnv.PYTHONPATH"), os.path.dirname(_PKG_DIR)]
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(filter(None, paths))
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     # ship the package to Python workers (the --py-files mechanism), so
