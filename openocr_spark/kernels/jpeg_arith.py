@@ -1,15 +1,20 @@
-"""T.81 Annex D/F arithmetic-coded JPEG entropy decoding (SOF9,
-sequential DCT) — the QM coder plus the Annex F statistical models,
-from the public spec, numpy/stdlib only.
+"""T.81 Annex D/F/H arithmetic-coded JPEG entropy decoding — the QM
+coder plus the Annex F/H statistical models, from the public spec,
+numpy/stdlib only.
 
 The reference decodes JPEG via cv2 (opendet/preprocess/__init__.py:
 85-143); cv2/libjpeg treat arithmetic streams as a first-class coding
 mode, and round 4's fail-loud boundary here was the last JPEG coding
-mode this engine rejected. Scope: sequential DCT (SOF9) AND
-progressive DCT (SOF10 — DC first/refine, AC band first/refine per
-F.2.1.4.3, accumulated into the same coefficient store as Huffman
-progressive), 8-bit, interleaved MCUs, restart intervals, DAC
-conditioning (L/U for DC, Kx for AC).
+mode this engine rejected. Scope: sequential DCT (SOF9, differential
+SOF13), progressive DCT (SOF10/SOF14 — DC first/refine, AC band
+first/refine per F.2.1.4.3, accumulated into the same coefficient store
+as Huffman progressive) and lossless (SOF11/SOF15, Annex H.2), 8-bit
+DCT and 2..16-bit lossless samples, interleaved and single-component
+scans, restart intervals, DAC conditioning (L/U for DC and lossless, Kx
+for AC). This module supplies only the entropy decoding: the data-unit
+order of every DCT scan (jpeg_format._scan_walk) and the lossless
+sample loop with its predictors (jpeg_format._decode_lossless_scan)
+live in jpeg_format and are shared with the Huffman coder.
 
 Validation: the test-side encoder (tests/jpeg_arith_ref_encoder.py)
 implements the ENCODE direction independently (its own carry/stuff
@@ -198,195 +203,77 @@ class ArithDecoder:
 
 
 class _Stats:
-    """Per-scan statistics areas + DC predictors/conditioning."""
+    """One restart interval's statistics areas (per table id) and the
+    DC predictor and conditioning class of each scan slot."""
 
-    def __init__(self, comps: list[dict]) -> None:
-        self.dc = {c["tq_dc_tbl"]: _ctx_bank(64) for c in comps}
-        self.ac = {c["tq_ac_tbl"]: _ctx_bank(256) for c in comps}
+    def __init__(self, scan: list[tuple[dict, int, int]]) -> None:
+        self.dc = {td: _ctx_bank(64) for _c, td, _ta in scan}
+        self.ac = {ta: _ctx_bank(256) for _c, _td, ta in scan}
         self.fixed = _Ctx()
         self.fixed.idx = FIXED_BIN
-        self.dc_context = {c["id"]: 0 for c in comps}
-        self.pred = {c["id"]: 0 for c in comps}
-
-    def reset(self, comps: list[dict]) -> None:
-        for bank in list(self.dc.values()) + list(self.ac.values()):
-            for ctx in bank:
-                ctx.idx = 0
-                ctx.mps = 0
-        self.dc_context = {c["id"]: 0 for c in comps}
-        self.pred = {c["id"]: 0 for c in comps}
+        self.dc_context = [0] * len(scan)
+        self.pred = [0] * len(scan)
 
 
-def _decode_dc(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
-               cid: int, cond: tuple[int, int]) -> int:
-    """F.2.1.4.1: decode one DC DIFF and update the conditioning
-    class for the next block of this component. Value reconstruction
-    per Figures F.23/F.24: magnitude category m ∈ {0,1,2,4,...}, then
-    bit_length(m)−1 magnitude bits, then v = (m|bits) + 1."""
-    L, U = cond
-    base = stats.dc_context[cid]
-    if dec.decode(st[base]) == 0:
-        stats.dc_context[cid] = 0
-        return 0
-    sign = dec.decode(st[base + 1])
-    k = base + 2 + sign
-    m = dec.decode(st[k])
-    if m != 0:
-        k = 20  # X1 (Table F.4)
-        while dec.decode(st[k]):
-            m <<= 1
-            if m == 0x8000:
-                raise NotImplementedError("JPEG-arith: DC magnitude overflow")
-            k += 1
-    # conditioning category for the NEXT block (F.1.4.4.1.2)
-    if m < ((1 << L) >> 1):
-        stats.dc_context[cid] = 0
-    elif m > ((1 << U) >> 1):
-        stats.dc_context[cid] = 12 + sign * 4
-    else:
-        stats.dc_context[cid] = 4 + sign * 4
+def _magnitude(dec: ArithDecoder, st: list[_Ctx], m: int, k: int,
+               what: str) -> tuple[int, int]:
+    """Figures F.23/F.24: climb the magnitude-category ladder from bin
+    X_n = `k` while it decides "larger" (the category base `m` doubles
+    per rung), then decode the bits below m's top bit from bin
+    M_n = X_n + 14. Returns (m, |value|), |value| = (m | bits) + 1."""
+    while dec.decode(st[k]):
+        m <<= 1
+        if m == 0x8000:
+            raise NotImplementedError(f"JPEG-arith: {what} magnitude overflow")
+        k += 1
     v = m
-    bits_ctx = st[k + 14]  # M_n = X_n + 14; unused when m < 2
+    bits_ctx = st[k + 14]
     mm = m >> 1
     while mm:
         if dec.decode(bits_ctx):
             v |= mm
         mm >>= 1
-    v += 1
-    return -v if sign else v
+    return m, v + 1
 
 
-def _decode_ac(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
-               kx: int, zz: np.ndarray) -> None:
-    """F.2.1.4.2: decode the 63 AC coefficients of one block into zz
-    (zigzag order). Unlike DC, the magnitude category spends TWO
-    decisions in the per-k context (v>1?, v>2?) before entering the
-    shared low-k / high-k ladder."""
-    k = 1
-    while k <= 63:
-        base = 3 * (k - 1)
-        if dec.decode(st[base]):  # EOB
-            return
-        while dec.decode(st[base + 1]) == 0:
-            k += 1
-            if k > 63:
-                raise NotImplementedError("JPEG-arith: AC index overflow")
-            base = 3 * (k - 1)
-        sign = dec.decode(stats.fixed)
-        j = base + 2
-        m = dec.decode(st[j])
-        if m != 0 and dec.decode(st[j]):
-            m = 2
-            j = 189 if k <= kx else 217
-            while dec.decode(st[j]):
-                m <<= 1
-                if m == 0x8000:
-                    raise NotImplementedError(
-                        "JPEG-arith: AC magnitude overflow"
-                    )
-                j += 1
-        v = m
-        bits_ctx = st[j + 14]  # unused when m < 2
-        mm = m >> 1
-        while mm:
-            if dec.decode(bits_ctx):
-                v |= mm
-            mm >>= 1
-        v += 1
-        zz[k] = -v if sign else v
-        k += 1
+def _classify(m: int, sign: int, L: int, U: int) -> int:
+    """Conditioning class of a decoded DC or lossless difference: 0 =
+    zero, 1/2 = small +/−, 3/4 = large +/− (F.1.4.4.1.2 thresholds on
+    the magnitude-category base m)."""
+    if m < ((1 << L) >> 1):
+        return 0
+    if m > ((1 << U) >> 1):
+        return 3 + sign
+    return 1 + sign
 
 
-def decode_arith_scan(
-    data: bytes,
-    pos: int,
-    frame: dict,
-    scan: list[tuple[dict, int, int]],
-    restart_interval: int,
-    conditioning: dict,
-    store: dict[int, np.ndarray],
-) -> None:
-    """Sequential arithmetic scan → the zigzag coefficient store (the
-    same store-based reconstruction as the Huffman path — decode_jpeg
-    batch-IDCTs it at EOI / the next frame header; only the entropy
-    layer differs here). Interleaved scans walk the padded MCU grid;
-    Ns=1 scans are non-interleaved per T.81 A.2.2 (block raster over
-    the component's own grid), so a sequential arithmetic frame may
-    spread its components across several scans."""
-    from openocr_spark.kernels.jpeg_format import _comp_blocks
-
-    comps = frame["comps"]
-    # scan entry: (comp, td, ta) — arithmetic tables use the same ids
-    for comp, td, ta in scan:
-        comp["tq_dc_tbl"] = td
-        comp["tq_ac_tbl"] = ta
-    stats = _Stats([c for c, _t, _a in scan])
-    dec = ArithDecoder(data, pos)
-    # differential frames (hierarchical): DC coded directly (PRED = 0)
-    diff_frame = bool(frame.get("differential"))
-
-    def decode_block(comp, td, ta, by, bx):
-        zz = [0] * 64
-        diff = _decode_dc(
-            dec, stats.dc[td], stats, comp["id"],
-            conditioning.get(("dc", td), (0, 1)),
-        )
-        if diff_frame:
-            zz[0] = diff
-        else:
-            stats.pred[comp["id"]] += diff
-            zz[0] = stats.pred[comp["id"]]
-        _decode_ac(dec, stats.ac[ta], stats,
-                   conditioning.get(("ac", ta), 5), zz)
-        store[comp["id"]][by, bx] = zz
-
-    def restart():
-        dec.align_restart()
-        stats.reset([c for c, _t, _a in scan])
-        dec.__init__(data, dec.pos)
-
-    n = 0  # MCUs since scan start
-    if len(scan) > 1:  # interleaved: MCU order over the padded grid
-        hmax = max(c["h"] for c in comps)
-        vmax = max(c["v"] for c in comps)
-        mcus_x = -(-frame["w"] // (8 * hmax))
-        mcus_y = -(-frame["h"] // (8 * vmax))
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                if restart_interval and n and n % restart_interval == 0:
-                    restart()
-                for comp, td, ta in scan:
-                    for by in range(comp["v"]):
-                        for bx in range(comp["h"]):
-                            decode_block(
-                                comp, td, ta,
-                                my * comp["v"] + by, mx * comp["h"] + bx,
-                            )
-                n += 1
+def _decode_dc(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
+               slot: int, cond: tuple[int, int]) -> int:
+    """F.2.1.4.1: decode one DC DIFF and update the conditioning
+    class for the next block of this scan slot. Value reconstruction
+    per Figures F.23/F.24: magnitude category m ∈ {0,1,2,4,...}, then
+    bit_length(m)−1 magnitude bits, then v = (m|bits) + 1."""
+    base = stats.dc_context[slot]
+    if dec.decode(st[base]) == 0:
+        stats.dc_context[slot] = 0
+        return 0
+    sign = dec.decode(st[base + 1])
+    if dec.decode(st[base + 2 + sign]):
+        m, v = _magnitude(dec, st, 1, 20, "DC")  # X1 at 20 (Table F.4)
     else:
-        comp, td, ta = scan[0]
-        bh, bw = _comp_blocks(frame, comp)
-        for by in range(bh):
-            for bx in range(bw):
-                if restart_interval and n and n % restart_interval == 0:
-                    restart()
-                decode_block(comp, td, ta, by, bx)
-                n += 1
-
-
-# --- progressive arithmetic (SOF10, F.2.1.4.3) -------------------------
-#
-# Same spectral-selection / successive-approximation scan structure as
-# Huffman progressive (jpeg_format._progressive_scan), with the Annex F
-# arithmetic models per scan kind: DC-first = the sequential DC model
-# over point-transformed values; DC-refine = ONE fixed-bin decision per
-# block; AC-first = the sequential AC model over the Ss..Se band;
-# AC-refine = per-coefficient correction/significance decisions.
-# Statistics and the coder reset at every scan (and restart interval).
+        m, v = 0, 1
+    # conditioning category for the NEXT block: 4 bins per class
+    stats.dc_context[slot] = 4 * _classify(m, sign, *cond)
+    return -v if sign else v
 
 
 def _prog_ac_first(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
                    kx: int, zz: np.ndarray, ss: int, se: int, al: int) -> None:
+    """F.2.1.4.2: the AC coefficients Ss..Se of one block into zz
+    (zigzag order), point-transformed by Al — the whole 1..63 band with
+    Al = 0 in sequential scans. Unlike DC, the magnitude category
+    spends TWO decisions in the per-k context (v>1?, v>2?) before
+    entering the shared low-k / high-k ladder."""
     k = ss
     while k <= se:
         base = 3 * (k - 1)
@@ -399,23 +286,12 @@ def _prog_ac_first(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
             base = 3 * (k - 1)
         sign = dec.decode(stats.fixed)
         j = base + 2
-        m = dec.decode(st[j])
-        if m != 0 and dec.decode(st[j]):
-            m = 2
-            j = 189 if k <= kx else 217
-            while dec.decode(st[j]):
-                m <<= 1
-                if m == 0x8000:
-                    raise NotImplementedError("JPEG-arith: AC magnitude overflow")
-                j += 1
-        v = m
-        bits_ctx = st[j + 14]
-        mm = m >> 1
-        while mm:
-            if dec.decode(bits_ctx):
-                v |= mm
-            mm >>= 1
-        v += 1
+        if not dec.decode(st[j]):
+            v = 1
+        elif not dec.decode(st[j]):
+            v = 2
+        else:
+            v = _magnitude(dec, st, 2, 189 if k <= kx else 217, "AC")[1]
         zz[k] = -(v << al) if sign else (v << al)
         k += 1
 
@@ -448,110 +324,61 @@ def _prog_ac_refine(dec: ArithDecoder, st: list[_Ctx], stats: _Stats,
         k += 1
 
 
-def progressive_arith_scan(
-    data: bytes,
-    pos: int,
-    frame: dict,
-    scan: list[tuple[dict, int, int]],
-    restart_interval: int,
-    conditioning: dict,
-    ss: int,
-    se: int,
-    ah: int,
-    al: int,
-    store: dict[int, np.ndarray],
-) -> None:
-    """Accumulate one SOF10 scan into the shared progressive
-    coefficient store (zigzag int32, same layout as the Huffman path —
-    dequant + IDCT happen once at EOI via _progressive_reconstruct)."""
-    from openocr_spark.kernels.jpeg_format import _comp_blocks
-
-    comps = frame["comps"]
-    for comp, td, ta in scan:
-        comp["tq_dc_tbl"] = td
-        comp["tq_ac_tbl"] = ta
-    scan_comps = [c for c, _t, _a in scan]
-    stats = _Stats(scan_comps)
-    dec = ArithDecoder(data, pos)
-    unit = 0
-
-    def maybe_restart():
-        nonlocal dec, stats, unit
-        if restart_interval and unit and unit % restart_interval == 0:
+def decode_arith_scan(data, pos, frame, scan, walk, conditioning,
+                      spectral, store) -> None:
+    """One arithmetic DCT scan (SOF9/SOF10, differential SOF13/SOF14)
+    into the zigzag coefficient store, in the data-unit order of `walk`
+    (jpeg_format._scan_walk); the store-based reconstruction is the
+    Huffman path's. A progressive scan (F.2.1.4.3) has the Huffman
+    progressive structure with the Annex F models per scan kind:
+    DC-first = the DC model over point-transformed values; DC-refine =
+    ONE fixed-bin decision per block; AC-first = the AC model over the
+    Ss..Se band; AC-refine = per-coefficient correction/significance
+    decisions. A sequential scan is DC-first then AC-first over 1..63
+    with Al = 0 in every block, and rewrites every block of its
+    components. Statistics and the coder reset at every scan and
+    restart interval."""
+    if frame["progressive"]:
+        ss, se, ah, al = spectral
+        if ss == 0:
+            if se != 0:
+                raise NotImplementedError("JPEG-arith: DC scan with Se != 0")
+        elif len(scan) != 1:
+            raise NotImplementedError("JPEG-arith: interleaved AC scan")
+    else:
+        ss, se, ah, al = 0, 63, 0, 0
+        for comp, _td, _ta in scan:
+            store[comp["id"]].fill(0)
+    flats = [store[c["id"]].reshape(-1) for c, _td, _ta in scan]
+    models = [(td, ta, conditioning.get(("dc", td), (0, 1)),
+               conditioning.get(("ac", ta), 5)) for _c, td, ta in scan]
+    # differential frames (hierarchical): DC coded directly (PRED = 0)
+    diff_frame = bool(frame.get("differential"))
+    for i, interval in enumerate(walk):
+        if i:  # RSTn: fresh coder and statistics (F.1.4.3)
             dec.align_restart()
-            stats = _Stats(scan_comps)
-            dec = ArithDecoder(data, dec.pos)
-
-    if ss == 0:  # DC scan
-        if se != 0:
-            raise NotImplementedError("JPEG-arith: DC scan with Se != 0")
-        if len(scan) > 1:  # interleaved, MCU order
-            hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
-            mcus_x = -(-frame["w"] // (8 * hmax))
-            mcus_y = -(-frame["h"] // (8 * vmax))
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    maybe_restart()
-                    for comp, td, _ta in scan:
-                        cid = comp["id"]
-                        for by in range(comp["v"]):
-                            for bx in range(comp["h"]):
-                                blk = store[cid][
-                                    my * comp["v"] + by, mx * comp["h"] + bx
-                                ]
-                                if ah == 0:
-                                    diff = _decode_dc(
-                                        dec, stats.dc[td], stats, cid,
-                                        conditioning.get(("dc", td), (0, 1)),
-                                    )
-                                    if frame.get("differential"):
-                                        blk[0] = diff << al
-                                    else:
-                                        stats.pred[cid] += diff
-                                        blk[0] = stats.pred[cid] << al
-                                elif dec.decode(stats.fixed):
-                                    blk[0] |= 1 << al
-                    unit += 1
-        else:
-            comp, td, _ta = scan[0]
-            cid = comp["id"]
-            bh, bw = _comp_blocks(frame, comp)
-            for by in range(bh):
-                for bx in range(bw):
-                    maybe_restart()
-                    blk = store[cid][by, bx]
-                    if ah == 0:
-                        diff = _decode_dc(
-                            dec, stats.dc[td], stats, cid,
-                            conditioning.get(("dc", td), (0, 1)),
-                        )
-                        if frame.get("differential"):
-                            blk[0] = diff << al
-                        else:
-                            stats.pred[cid] += diff
-                            blk[0] = stats.pred[cid] << al
-                    elif dec.decode(stats.fixed):
-                        blk[0] |= 1 << al
-                    unit += 1
-        return
-
-    if len(scan) != 1:
-        raise NotImplementedError("JPEG-arith: interleaved AC scan")
-    comp, _td, ta = scan[0]
-    kx = conditioning.get(("ac", ta), 5)
-    arr = store[comp["id"]]
-    bh, bw = _comp_blocks(frame, comp)
-    for by in range(bh):
-        for bx in range(bw):
-            maybe_restart()
-            if ah == 0:
-                _prog_ac_first(dec, stats.ac[ta], stats, kx, arr[by, bx],
-                               ss, se, al)
-            else:
-                _prog_ac_refine(dec, stats.ac[ta], stats, arr[by, bx],
-                                ss, se, al)
-            unit += 1
+            pos = dec.pos
+        dec = ArithDecoder(data, pos)
+        stats = _Stats(scan)
+        for slot, off in interval:
+            td, ta, cond, kx = models[slot]
+            blk = flats[slot][off : off + 64]
+            if ss == 0:
+                if ah == 0:
+                    diff = _decode_dc(dec, stats.dc[td], stats, slot, cond)
+                    if not diff_frame:
+                        stats.pred[slot] += diff
+                        diff = stats.pred[slot]
+                    blk[0] = diff << al
+                elif dec.decode(stats.fixed):
+                    blk[0] |= 1 << al
+            if se:  # the AC band: Ss..Se, 1..63 in sequential scans
+                if ah == 0:
+                    _prog_ac_first(dec, stats.ac[ta], stats, kx, blk,
+                                   ss or 1, se, al)
+                else:
+                    _prog_ac_refine(dec, stats.ac[ta], stats, blk,
+                                    ss, se, al)
 
 
 # --- lossless arithmetic (SOF11, Annex H.2) ----------------------------
@@ -567,138 +394,55 @@ def progressive_arith_scan(
 #            used when Db is NOT in a large category
 #   129..157 second ladder + bits, used when Db IS large
 # Spatial prediction, modulo-65536 reconstruction, point transform and
-# restart semantics are identical to the Huffman lossless path (Annex
-# H.1 applies to both entropy modes; only the difference coding layer
-# changes). The first sample of the scan / of a restart interval is
-# coded with the default prediction and (Da, Db) = (zero, zero).
+# restart semantics are the Huffman lossless path's (Annex H.1 applies
+# to both entropy modes): jpeg_format._decode_lossless_scan runs them
+# for both, and ArithLossless supplies only the difference decoding.
+# The first sample of the scan / of a restart interval is coded with
+# the default prediction and (Da, Db) = (zero, zero).
 
 _LL_SET0 = 100  # ladder when Db classification is zero/small
 _LL_SET1 = 129  # ladder when Db classification is large
 
 
-def _ll_classify(m: int, sign: int, L: int, U: int) -> int:
-    """Classification code for a decoded difference: 0 = zero,
-    1/2 = small +/−, 3/4 = large +/− (F.1.4.4.1.2 thresholds on the
-    magnitude-category base m)."""
-    if m < ((1 << L) >> 1):
-        return 0
-    if m > ((1 << U) >> 1):
-        return 3 + sign
-    return 1 + sign
+class ArithLossless:
+    """Annex H.2 difference decoder for jpeg_format's lossless sample
+    loop (_decode_lossless_scan): differences QM-coded under the
+    two-dimensional (Da, Db) conditioning model, with one
+    classification plane per scan slot."""
 
+    def __init__(self, data: bytes, pos: int, frame: dict,
+                 scan: list[tuple[dict, int, int]], conditioning: dict) -> None:
+        self.data = data
+        self.dec = ArithDecoder(data, pos)
+        self.tds = [td for _c, td, _ta in scan]
+        self.banks = {td: _ctx_bank(158) for td in self.tds}
+        self.conds = [conditioning.get(("dc", td), (0, 1)) for td in self.tds]
+        self.cls = [np.zeros((frame["h"], frame["w"]), np.uint8) for _ in scan]
 
-def decode_lossless_arith_scan(
-    data: bytes,
-    pos: int,
-    frame: dict,
-    scan: list[tuple[dict, int, int]],
-    restart_interval: int,
-    conditioning: dict,
-    predictor: int,
-    pt: int,
-) -> np.ndarray:
-    """T.81 Annex H.2 lossless arithmetic scan → assembled image
-    (same output conventions as jpeg_format._decode_lossless_scan:
-    bit-exact samples, >8-bit precision down-converted to uint8)."""
-    from openocr_spark.kernels.jpeg_format import lossless_output
+    def restart(self) -> None:
+        """RSTn: fresh coder and statistics."""
+        self.dec.align_restart()
+        self.dec = ArithDecoder(self.data, self.dec.pos)
+        self.banks = {td: _ctx_bank(158) for td in self.banks}
 
-    h, w = frame["h"], frame["w"]
-    prec = frame["prec"]
-    if any(c["h"] != 1 or c["v"] != 1 for c, _t, _a in scan):
-        raise NotImplementedError("JPEG: subsampled lossless components")
-    # differential frames (SOF15, hierarchical): Ss = 0 — no spatial
-    # prediction; the coded values ARE the differences vs the reference
-    diff_frame = bool(frame.get("differential"))
-    if diff_frame:
-        if predictor != 0:
-            raise NotImplementedError(
-                "JPEG: differential lossless scan requires Ss = 0"
-            )
-        if pt != 0:
-            raise NotImplementedError(
-                "JPEG: point transform in differential lossless scan"
-            )
-    elif not 1 <= predictor <= 7:
-        raise NotImplementedError(f"JPEG: lossless predictor {predictor}")
-    planes = {c["id"]: np.zeros((h, w), np.int32) for c, _t, _a in scan}
-    cls = {c["id"]: np.zeros((h, w), np.uint8) for c, _t, _a in scan}
-    banks = {td: _ctx_bank(158) for _c, td, _a in scan}
-    conds = {td: conditioning.get(("dc", td), (0, 1)) for _c, td, _a in scan}
-    dec = ArithDecoder(data, pos)
-    default = 1 << (prec - 1 - pt)
-    unit = 0
-    fresh = True
-    ra_row = 0  # row where the current restart interval began (T.81
-    # H.1.1: the 1-D Ra predictor serves the first line of the scan
-    # and of each restart interval; conditioning treats the line above
-    # as outside the interval there, mirrored by the test encoder)
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and unit and unit % restart_interval == 0:
-                dec.align_restart()
-                for bank in banks.values():
-                    for ctx in bank:
-                        ctx.idx = 0
-                        ctx.mps = 0
-                dec.__init__(data, dec.pos)
-                fresh = True
-                ra_row = y
-            for comp, td, _ta in scan:
-                st = banks[td]
-                L, U = conds[td]
-                p = planes[comp["id"]]
-                cl = cls[comp["id"]]
-                da = 0 if (fresh or x == 0) else int(cl[y, x - 1])
-                db = 0 if (fresh or y == ra_row) else int(cl[y - 1, x])
-                base = 4 * (5 * da + db)
-                if dec.decode(st[base]) == 0:
-                    diff = 0
-                    cl[y, x] = 0
-                else:
-                    sign = dec.decode(st[base + 1])
-                    k = base + 2 + sign
-                    m = dec.decode(st[k])
-                    if m != 0:
-                        k = _LL_SET1 if db >= 3 else _LL_SET0
-                        while dec.decode(st[k]):
-                            m <<= 1
-                            if m == 0x8000:
-                                raise NotImplementedError(
-                                    "JPEG-arith: lossless magnitude overflow"
-                                )
-                            k += 1
-                    v = m
-                    bits_ctx = st[k + 14]  # unused when m < 2
-                    mm = m >> 1
-                    while mm:
-                        if dec.decode(bits_ctx):
-                            v |= mm
-                        mm >>= 1
-                    v += 1
-                    cl[y, x] = _ll_classify(m, sign, L, U)
-                    diff = -v if sign else v
-                if diff_frame:
-                    px = 0
-                elif fresh:
-                    px = default
-                elif y == ra_row:
-                    px = int(p[y, x - 1])
-                elif x == 0:
-                    px = int(p[y - 1, 0])
-                else:
-                    a = int(p[y, x - 1])
-                    b = int(p[y - 1, x])
-                    c = int(p[y - 1, x - 1])
-                    px = (
-                        a, b, c, a + b - c,
-                        a + ((b - c) >> 1), b + ((a - c) >> 1),
-                        (a + b) >> 1,
-                    )[predictor - 1]
-                p[y, x] = (px + diff) & 0xFFFF
-            fresh = False
-            unit += 1
-    if frame.get("_raw_planes"):
-        return planes
-    return lossless_output(
-        [planes[comp["id"]] for comp, _t, _a in scan], prec, pt
-    )
+    def diff(self, j: int, y: int, x: int, fresh: bool, ra_row: int) -> int:
+        """The difference of slot `j`'s sample (y, x). The first line
+        of the scan and of each restart interval treats the line above
+        as outside the interval (mirrored by the test encoder)."""
+        dec = self.dec
+        st = self.banks[self.tds[j]]
+        cl = self.cls[j]
+        da = 0 if (fresh or x == 0) else int(cl[y, x - 1])
+        db = 0 if (fresh or y == ra_row) else int(cl[y - 1, x])
+        base = 4 * (5 * da + db)
+        if dec.decode(st[base]) == 0:
+            cl[y, x] = 0
+            return 0
+        sign = dec.decode(st[base + 1])
+        if dec.decode(st[base + 2 + sign]):
+            m, v = _magnitude(dec, st, 1, _LL_SET1 if db >= 3 else _LL_SET0,
+                              "lossless")
+        else:
+            m, v = 0, 1
+        cl[y, x] = _classify(m, sign, *self.conds[j])
+        return -v if sign else v

@@ -39,7 +39,10 @@ tables parse. LOSSLESS is decoded in BOTH entropy modes: Huffman SOF3
 to 16-bit precision) and arithmetic SOF11 (Annex H.2: the same
 prediction pipeline with differences QM-coded under the
 two-dimensional (Da, Db) conditioning model —
-jpeg_arith.decode_lossless_arith_scan). 12-bit DCT precision decodes
+jpeg_arith.ArithLossless); both entropy modes share one sample loop
+(_decode_lossless_scan). Every DCT scan, sequential or progressive,
+Huffman or arithmetic, takes its data-unit order from _scan_walk and
+supplies only its entropy decoding. 12-bit DCT precision decodes
 with high-bits down-conversion to uint8 (the 16-bit-PNG convention).
 HIERARCHICAL mode (T.81 Annex J, late-r5) is decoded too: DHP opens
 the pyramid, EXP expands the reference components (J.1.1.2
@@ -452,18 +455,7 @@ def _decode_stream(data: bytes) -> np.ndarray:
                     hier, frame, _progressive_planes(frame, qtables, coef_store)
                 )
                 coef_store = None
-            # a multi-scan lossless frame left incomplete by the next
-            # SOF must fail loudly, not fold/assemble without its
-            # missing components (mirrors the EOI check)
-            if frame is not None and frame.get("_lossless_planes") and len(
-                frame["_lossless_planes"]
-            ) < len(frame["comps"]):
-                missing = [c["id"] for c in frame["comps"]
-                           if c["id"] not in frame["_lossless_planes"]]
-                raise NotImplementedError(
-                    "JPEG: lossless frame ended with undecoded "
-                    f"components {missing}"
-                )
+            _check_lossless_complete(frame)
             prec, h, w, nc = struct.unpack_from(">BHHB", body, 0)
             from openocr_spark.kernels.media_decode import check_dims
             check_dims(w, h, "JPEG", max(nc, 1))
@@ -511,7 +503,6 @@ def _decode_stream(data: bytes) -> np.ndarray:
                     )
                 frame["exp"] = pending_exp
                 pending_exp = None
-                frame["_raw_planes"] = True
         elif marker == 0xCC:  # DAC — arithmetic conditioning
             b = 0
             while b + 1 < len(body):
@@ -534,128 +525,64 @@ def _decode_stream(data: bytes) -> np.ndarray:
             if frame is None:
                 raise NotImplementedError("JPEG: SOS before SOF")
             frame["adobe"] = adobe
-            ns = body[0]
-            scan = []
-            for i in range(ns):
-                cs, tdta = body[1 + 2 * i], body[2 + 2 * i]
-                comp = next(c for c in frame["comps"] if c["id"] == cs)
-                scan.append((comp, tdta >> 4, tdta & 0x0F))
-            ss, se, ahal = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
-            if not frame.get("lossless"):
-                # freeze each component's quant table at its first scan
-                # (libjpeg's binding semantics): dequantization of the
-                # coefficient store is DEFERRED to the frame fold / EOI,
-                # by which time a later frame's DQT may have redefined
-                # the same table id — the live qtables dict must not
-                # retro-affect this frame
-                for comp, _, _ in scan:
-                    if "qsnap" not in comp:
-                        if comp["tq"] not in qtables:
-                            raise NotImplementedError(
-                                f"JPEG: scan before DQT {comp['tq']}"
-                            )
-                        comp["qsnap"] = qtables[comp["tq"]].copy()
-            out = None
-            if frame.get("lossless"):
+            scan, ss, se, ah, al = _scan_header(body, frame, qtables, htables)
+            if frame["lossless"]:
                 # Ss = predictor selector (1..7; 0 in differential
                 # frames), Al = point transform
-                if hier is not None and (ahal & 0x0F) != 0:
+                if hier is not None and al != 0:
                     raise NotImplementedError(
                         "JPEG: point transform in hierarchical lossless scan"
                     )
-                pt = ahal & 0x0F
-                if pt != frame.setdefault("_pt", pt):
+                if al != frame.setdefault("_pt", al):
                     raise NotImplementedError(
                         "JPEG: point transform changes between lossless scans"
                     )
+                if frame["arith"]:
+                    from openocr_spark.kernels.jpeg_arith import ArithLossless
+
+                    coder = ArithLossless(
+                        data, pos + seglen, frame, scan, conditioning
+                    )
+                else:
+                    coder = _HuffLossless(data, pos + seglen, scan, htables)
                 # a lossless frame may carry several scans (one
                 # component per scan, T.81 A.2.2 — like the sequential
                 # store-based path): decode each scan to raw planes,
                 # accumulate, assemble only when every frame component
                 # has been seen
-                was_raw = frame.get("_raw_planes", False)
-                frame["_raw_planes"] = True
-                if frame.get("arith"):
-                    from openocr_spark.kernels.jpeg_arith import (
-                        decode_lossless_arith_scan,
-                    )
-
-                    scan_planes = decode_lossless_arith_scan(
-                        data, pos + seglen, frame, scan, restart_interval,
-                        conditioning, ss, pt,
-                    )
-                else:
-                    scan_planes = _decode_lossless_scan(
-                        data, pos + seglen, frame, scan, htables,
-                        restart_interval, ss, pt,
-                    )
-                frame["_raw_planes"] = was_raw
                 store = frame.setdefault("_lossless_planes", {})
-                store.update(scan_planes)
-                if len(store) < len(frame["comps"]):
-                    pos = _next_marker(data, pos + seglen)
-                    continue
-                if was_raw:  # hierarchical fold consumes raw planes
-                    out = dict(store)
-                else:
-                    out = lossless_output(
-                        [store[c["id"]] for c in frame["comps"]],
-                        frame["prec"], pt,
-                    )
-            elif frame.get("arith") and frame["progressive"]:
-                from openocr_spark.kernels.jpeg_arith import (
-                    progressive_arith_scan,
-                )
-
-                if coef_store is None:
-                    coef_store = _alloc_coef_store(frame)
-                progressive_arith_scan(
-                    data, pos + seglen, frame, scan, restart_interval,
-                    conditioning, ss, se, ahal >> 4, ahal & 0x0F,
-                    coef_store,
-                )
+                store.update(_decode_lossless_scan(
+                    frame, scan, restart_interval, ss, al, coder
+                ))
+                if len(store) == len(frame["comps"]):
+                    if hier is None:  # single-frame stream: the image
+                        return lossless_output(
+                            [store[c["id"]] for c in frame["comps"]],
+                            frame["prec"], al,
+                        )
+                    _hier_fold(hier, frame, store)
                 pos = _next_marker(data, pos + seglen)
                 continue
-            elif frame.get("arith"):
-                # sequential arithmetic: same store-based flow as the
-                # Huffman branch below (batched IDCT at EOI / the next
-                # frame header; multi-scan non-interleaved frames work)
+            # DCT scans entropy-decode into the zigzag coefficient
+            # store; reconstruction is the batched IDCT at EOI / the
+            # next frame header, so a frame may spread its components
+            # over several scans (T.81 A.2.2)
+            if frame["arith"]:
                 from openocr_spark.kernels.jpeg_arith import decode_arith_scan
 
-                if coef_store is None:
-                    coef_store = _alloc_coef_store(frame)
-                decode_arith_scan(
-                    data, pos + seglen, frame, scan,
-                    restart_interval, conditioning, coef_store,
-                )
-                pos = _next_marker(data, pos + seglen)
-                continue
-            elif not frame["progressive"]:
-                # sequential Huffman: entropy-decode into the zigzag
-                # coefficient store; reconstruction is the shared
-                # batched-IDCT path at EOI / the next frame header —
-                # this also lets a sequential frame carry several
-                # non-interleaved scans (one per component, T.81 A.2.2)
-                if coef_store is None:
-                    coef_store = _alloc_coef_store(frame)
-                _sequential_scan(
-                    data, pos + seglen, frame, scan, htables,
-                    restart_interval, coef_store,
-                )
-                pos = _next_marker(data, pos + seglen)
-                continue
+                tables = conditioning
+                scan_fn = decode_arith_scan
             else:
-                if coef_store is None:
-                    coef_store = _alloc_coef_store(frame)
-                _progressive_scan(
-                    data, pos + seglen, frame, scan, htables, restart_interval,
-                    ss, se, ahal >> 4, ahal & 0x0F, coef_store,
-                )
-                pos = _next_marker(data, pos + seglen)
-                continue
-            if hier is None:
-                return out  # single-frame stream: out is the image
-            _hier_fold(hier, frame, out)  # raw per-component planes
+                tables = htables
+                scan_fn = (_progressive_scan if frame["progressive"]
+                           else _sequential_scan)
+            if coef_store is None:
+                coef_store = _alloc_coef_store(frame)
+            scan_fn(
+                data, pos + seglen, frame, scan,
+                _scan_walk(frame, scan, restart_interval), tables,
+                (ss, se, ah, al), coef_store,
+            )
             pos = _next_marker(data, pos + seglen)
             continue
         pos += seglen
@@ -664,44 +591,106 @@ def _decode_stream(data: bytes) -> np.ndarray:
             _hier_fold(
                 hier, frame, _progressive_planes(frame, qtables, coef_store)
             )
-        if frame is not None and frame.get("_lossless_planes") and len(
-            frame["_lossless_planes"]
-        ) < len(frame["comps"]):
-            missing = [c["id"] for c in frame["comps"]
-                       if c["id"] not in frame["_lossless_planes"]]
-            raise NotImplementedError(
-                "JPEG: lossless frame ended with undecoded "
-                f"components {missing}"
-            )
+        _check_lossless_complete(frame)
         if frame is None or not hier["ref"]:
             raise NotImplementedError("JPEG: hierarchical stream with no frames")
         return _hier_assemble(hier, frame, adobe)
     if coef_store is not None:
         frame["adobe"] = adobe
         return _progressive_reconstruct(frame, qtables, coef_store)
-    if frame is not None and frame.get("_lossless_planes"):
-        missing = [c["id"] for c in frame["comps"]
-                   if c["id"] not in frame["_lossless_planes"]]
-        raise NotImplementedError(
-            f"JPEG: lossless frame ended with undecoded components {missing}"
-        )
+    _check_lossless_complete(frame)
     raise NotImplementedError("JPEG: no scan data")
 
 
-def _decode_lossless_scan(
-    data, pos, frame, scan, htables, restart_interval, predictor, pt
-):
-    """T.81 Annex H lossless process: per-sample Huffman-coded
-    differences against one of the 7 spatial predictors, modulo-65536
-    reconstruction, point transform Pt, 2..16-bit precision (>8-bit
-    down-converts to uint8 by high-bits truncation, the 16-bit-PNG
-    convention), restart intervals (prediction resets to the default at
-    each RSTn, T.81 H.1.1). Sample-interleaved MCUs with 1×1 sampling
-    (the only layout real lossless files use). Output follows the
-    module conventions: gray (1 comp) or RGB-stacked (3 comps,
-    components taken as direct color planes)."""
+def _check_lossless_complete(frame: dict | None) -> None:
+    """A multi-scan lossless frame that ends (at the next frame header
+    or at EOI) before every component was decoded fails loudly instead
+    of folding or assembling without its missing components."""
+    planes = frame.get("_lossless_planes") if frame else None
+    if planes and len(planes) < len(frame["comps"]):
+        missing = [c["id"] for c in frame["comps"] if c["id"] not in planes]
+        raise NotImplementedError(
+            f"JPEG: lossless frame ended with undecoded components {missing}"
+        )
+
+
+def _scan_header(body: bytes, frame: dict, qtables: dict, htables: dict):
+    """SOS segment body → (scan, Ss, Se, Ah, Al), `scan` holding one
+    (component, Td, Ta) triple per scan component. Rejects, for every
+    scan kind, a header that is cut short or lists no component, a
+    component the frame does not have or lists twice, and, in Huffman
+    frames, a table selector that names a table no DHT defined (only
+    the tables the scan reads: DC in all but AC-band and DC-refinement
+    scans, AC in all DCT scans but DC ones). In DCT frames it freezes
+    each component's quant table at its first scan (libjpeg's binding
+    semantics): dequantization of the coefficient store is DEFERRED to
+    the frame fold / EOI, by which time a later frame's DQT may have
+    redefined the same table id — the live qtables dict must not
+    retro-affect this frame."""
+    ns = body[0] if body else 0
+    if ns == 0 or len(body) < 4 + 2 * ns:
+        raise NotImplementedError("JPEG: bad scan header")
+    scan = []
+    for i in range(ns):
+        cs, tdta = body[1 + 2 * i], body[2 + 2 * i]
+        comp = next((c for c in frame["comps"] if c["id"] == cs), None)
+        if comp is None:
+            raise NotImplementedError(f"JPEG: scan names unknown component {cs}")
+        scan.append((comp, tdta >> 4, tdta & 0x0F))
+    if not frame["lossless"]:
+        for comp, _td, _ta in scan:
+            if "qsnap" not in comp:
+                if comp["tq"] not in qtables:
+                    raise NotImplementedError(
+                        f"JPEG: scan before DQT {comp['tq']}"
+                    )
+                comp["qsnap"] = qtables[comp["tq"]].copy()
+    if len({id(c) for c, _td, _ta in scan}) != ns:
+        raise NotImplementedError("JPEG: component repeated in scan")
+    ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
+    ah = ahal >> 4
+    if not frame["arith"]:
+        lossless, prog = frame["lossless"], frame["progressive"]
+        reads_dc = lossless or not prog or (ss == 0 and ah == 0)
+        reads_ac = not lossless and (not prog or ss > 0)
+        for _c, td, ta in scan:
+            for tc, th, used in ((0, td, reads_dc), (1, ta, reads_ac)):
+                if used and (tc, th) not in htables:
+                    raise NotImplementedError(
+                        f"JPEG: scan uses undefined Huffman table {th} "
+                        f"({'AC' if tc else 'DC'})"
+                    )
+    return scan, ss, se, ah, ahal & 0x0F
+
+
+class _HuffLossless:
+    """Huffman difference decoder for _decode_lossless_scan (T.81
+    H.1.2): one DC-table category per difference, category 16 meaning
+    32768 with no magnitude bits."""
+
+    def __init__(self, data: bytes, pos: int, scan, htables: dict) -> None:
+        self.r = _BitReader(data, pos)
+        self.restart = self.r.restart
+        self.tabs = [htables[(0, td)] for _c, td, _ta in scan]
+
+    def diff(self, j: int, y: int, x: int, fresh: bool, ra_row: int) -> int:
+        r = self.r
+        t = _huff_decode(r, self.tabs[j])
+        return 32768 if t == 16 else (_extend(r.bits(t), t) if t else 0)
+
+
+def _decode_lossless_scan(frame, scan, restart_interval, predictor, pt, coder):
+    """T.81 Annex H lossless scan, either entropy coder → {component id:
+    raw int32 sample plane}: per-sample differences (`coder.diff`, the
+    Huffman _HuffLossless or jpeg_arith.ArithLossless) against one of
+    the 7 spatial predictors, modulo-65536 reconstruction, point
+    transform Pt, 2..16-bit precision, restart intervals (prediction
+    resets to the default at each RSTn, `coder.restart` resets the
+    entropy decoder, T.81 H.1.1). Sample-interleaved MCUs with 1×1
+    sampling (the only layout real lossless files use); the caller
+    turns the planes into pixels (lossless_output) or folds them into a
+    hierarchical reference."""
     h, w = frame["h"], frame["w"]
-    prec = frame["prec"]
     if any(c["h"] != 1 or c["v"] != 1 for c, _t, _a in scan):
         raise NotImplementedError("JPEG: subsampled lossless components")
     # differential frames (hierarchical): Ss = 0 — no spatial
@@ -718,9 +707,8 @@ def _decode_lossless_scan(
             )
     elif not 1 <= predictor <= 7:
         raise NotImplementedError(f"JPEG: lossless predictor {predictor}")
-    planes = {c["id"]: np.zeros((h, w), np.int32) for c, _t, _a in scan}
-    r = _BitReader(data, pos)
-    default = 1 << (prec - 1 - pt)
+    planes = [np.zeros((h, w), np.int32) for _ in scan]
+    default = 1 << (frame["prec"] - 1 - pt)
     unit = 0  # lossless MCU = one sample position across scan components
     fresh = True  # next sample starts a scan/restart interval
     ra_row = 0  # row where the current restart interval began: T.81
@@ -730,13 +718,11 @@ def _decode_lossless_scan(
     for y in range(h):
         for x in range(w):
             if restart_interval and unit and unit % restart_interval == 0:
-                r.restart()
+                coder.restart()
                 fresh = True
                 ra_row = y
-            for comp, td, _ta in scan:
-                t = _huff_decode(r, htables[(0, td)])
-                diff = 32768 if t == 16 else (_extend(r.bits(t), t) if t else 0)
-                p = planes[comp["id"]]
+            for j, p in enumerate(planes):
+                diff = coder.diff(j, y, x, fresh, ra_row)
                 if diff_frame:
                     px = 0
                 elif fresh:
@@ -757,11 +743,7 @@ def _decode_lossless_scan(
                 p[y, x] = (px + diff) & 0xFFFF
             fresh = False
             unit += 1
-    if frame.get("_raw_planes"):
-        return planes
-    return lossless_output(
-        [planes[comp["id"]] for comp, _t, _a in scan], prec, pt
-    )
+    return {c["id"]: p for (c, _t, _a), p in zip(scan, planes)}
 
 
 def lossless_output(raw_planes: list, prec: int, pt: int):
@@ -878,62 +860,31 @@ def _hier_assemble(hier: dict, frame: dict, adobe) -> np.ndarray:
     return _assemble(planes, out_frame)
 
 
-def _sequential_scan(data, pos, frame, scan, htables, restart_interval, store):
+def _sequential_scan(data, pos, frame, scan, walk, htables, _spectral, store):
     """Sequential-DCT Huffman entropy decode (SOF0/SOF1, differential
-    SOF5 in hierarchical streams) into the zigzag coefficient store —
-    reconstruction is the batched-IDCT path shared with progressive
+    SOF5 in hierarchical streams) of one scan into the zigzag
+    coefficient store, in the data-unit order of `walk` (_scan_walk).
+    Reconstruction is the batched-IDCT path shared with progressive
     (_progressive_planes), so dequant + inverse zigzag + IDCT run as
     one einsum per component instead of per-block tiny-ndarray ops.
-    Interleaved scans (Ns>1) walk the padded MCU grid; single-component
-    scans are non-interleaved per T.81 A.2.2 — block raster over the
-    component's own grid with one data unit per MCU — which also lets
-    a sequential frame spread its components across several scans.
 
     The entropy loop is serial bit work, so it is written for the
     fewest interpreted operations per symbol: one loop over the data
-    units in decode order, the bit reader's position / accumulator /
-    bit count in locals, most symbols resolved by one `fast` lookahead
-    probe, and each nonzero coefficient appended as (flat index, value)
-    to two lists that land in the store with one numpy scatter at the
-    end of the scan (a 64-int row assignment per block costs about a
-    quarter of the block's decode)."""
-    ids = [c["id"] for c, _td, _ta in scan]
-    if len(set(ids)) != len(ids):
-        raise NotImplementedError("JPEG: component repeated in scan")
-    tabs = []
+    units, the bit reader's position / accumulator / bit count in
+    locals, most symbols resolved by one `fast` lookahead probe, and
+    each nonzero coefficient appended as (flat index, value) to its
+    component's two lists, which land in the zeroed store with one
+    numpy scatter per component at the end of the scan (a 64-int row
+    assignment per block costs about a quarter of the block's
+    decode)."""
+    tabs, coefs = [], []
     for _c, td, ta in scan:
         dc, ac = htables[(0, td)], htables[(1, ta)]
-        tabs.append(
-            (dc.fast, dc.lut_len, dc.lut_sym, ac.fast, ac.lut_len, ac.lut_sym)
-        )
-    # data units in decode order, one row per MCU: the unit's scan slot
-    # and the flat index of its DC coefficient. The flat index space
-    # chains each scan component's covered block grid: the whole
-    # MCU-padded store when interleaved, the component's own grid
-    # otherwise (restart intervals then count single blocks)
-    if len(scan) > 1:
-        comps = frame["comps"]
-        mcus_x = -(-frame["w"] // (8 * max(c["h"] for c in comps)))
-        mcus_y = -(-frame["h"] // (8 * max(c["v"] for c in comps)))
-        grids = [(mcus_y * c["v"], mcus_x * c["h"]) for c, _td, _ta in scan]
-        offs = np.cumsum([0] + [64 * gh * gw for gh, gw in grids])
-        my, mx = np.divmod(np.arange(mcus_y * mcus_x), mcus_x)
-        slot_cols, base_cols = [], []
-        for j, (comp, _td, _ta) in enumerate(scan):
-            by, bx = np.divmod(np.arange(comp["v"] * comp["h"]), comp["h"])
-            row = my[:, None] * comp["v"] + by
-            col = mx[:, None] * comp["h"] + bx
-            base_cols.append(offs[j] + 64 * (row * grids[j][1] + col))
-            slot_cols.append(np.full(row.shape, j))
-        bases = np.concatenate(base_cols, axis=1)
-        slots = np.concatenate(slot_cols, axis=1)
-    else:
-        grids = [_comp_blocks(frame, scan[0][0])]
-        offs = [0, 64 * grids[0][0] * grids[0][1]]
-        bases = np.arange(0, offs[1], 64)[:, None]
-        slots = np.zeros_like(bases)
-    n_mcu = len(bases)
-    step = restart_interval or n_mcu
+        idx: list[int] = []
+        vals: list[int] = []
+        coefs.append((idx, vals))
+        tabs.append((dc.fast, dc.lut_len, dc.lut_sym,
+                     ac.fast, ac.lut_len, ac.lut_sym, idx.append, vals.append))
     # differential frames (hierarchical mode) code DC directly
     # (PRED = 0); _progressive_planes omits their level shift
     diff_frame = bool(frame.get("differential"))
@@ -941,17 +892,14 @@ def _sequential_scan(data, pos, frame, scan, htables, restart_interval, store):
     d = data
     acc = nb = 0
     fbits, fmask = _FAST_BITS, (1 << _FAST_BITS) - 1
-    idx: list[int] = []
-    vals: list[int] = []
-    put_i, put_v = idx.append, vals.append
-    for start in range(0, n_mcu, step):
-        if start:
+    for i, interval in enumerate(walk):
+        if i:
             pos = _skip_restart(d, pos)
             acc = nb = 0
         preds = [0] * len(scan)
-        for slot, base in zip(slots[start : start + step].ravel().tolist(),
-                              bases[start : start + step].ravel().tolist()):
-            dc_fast, dc_len, dc_sym, ac_fast, ac_len, ac_sym = tabs[slot]
+        for slot, base in interval:
+            (dc_fast, dc_len, dc_sym,
+             ac_fast, ac_len, ac_sym, put_i, put_v) = tabs[slot]
             if nb < 16:
                 pos, acc, nb = _refill(d, pos, acc, nb)
             e = dc_fast[(acc >> (nb - fbits)) & fmask]
@@ -1029,11 +977,10 @@ def _sequential_scan(data, pos, frame, scan, htables, restart_interval, store):
                 put_v(v - (1 << ssss) + 1 if v < (1 << (ssss - 1)) else v)
                 k += 1
 
-    flat = np.zeros(int(offs[-1]), np.int32)
-    flat[idx] = vals
-    for j, cid in enumerate(ids):
-        gh, gw = grids[j]
-        store[cid][:gh, :gw] = flat[offs[j] : offs[j + 1]].reshape(gh, gw, 64)
+    for (comp, _td, _ta), (idx, vals) in zip(scan, coefs):
+        blocks = store[comp["id"]]
+        blocks.fill(0)  # the scan rewrites every block of its components
+        blocks.reshape(-1)[idx] = vals
 
 
 def _assemble(planes: dict, frame: dict) -> np.ndarray:
@@ -1044,8 +991,7 @@ def _assemble(planes: dict, frame: dict) -> np.ndarray:
     (4-comp; Adobe samples are stored inverted)."""
     h, w, comps = frame["h"], frame["w"], frame["comps"]
     adobe = frame.get("adobe")
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
+    hmax, vmax, _mcus_y, _mcus_x = _mcu_grid(frame)
     out_planes = []
     for c in comps:
         ph = -(-h * c["v"] // vmax)
@@ -1112,7 +1058,7 @@ def _assemble(planes: dict, frame: dict) -> np.ndarray:
 # T.81 Annex G). Scans accumulate QUANTIZED coefficients into a
 # per-component store; dequant + IDCT happen once at EOI. DC scans may
 # interleave components (MCU order); AC scans are single-component in
-# block-raster order over that component's own grid.
+# block-raster order over that component's own grid (_scan_walk).
 
 
 def _next_marker(data: bytes, pos: int) -> int:
@@ -1137,37 +1083,68 @@ def _next_marker(data: bytes, pos: int) -> int:
     return n
 
 
-def _alloc_coef_store(frame: dict) -> dict[int, np.ndarray]:
-    """Per-component (blocks_y, blocks_x, 64) int32 in ZIGZAG order,
-    MCU-padded so interleaved DC scans cover the full grid."""
+def _mcu_grid(frame: dict) -> tuple[int, int, int, int]:
+    """(hmax, vmax, mcus_y, mcus_x): the largest sampling factors and
+    the MCU grid that covers the frame (T.81 A.2.4)."""
     comps = frame["comps"]
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
-    mcus_x = -(-frame["w"] // (8 * hmax))
-    mcus_y = -(-frame["h"] // (8 * vmax))
+    return hmax, vmax, -(-frame["h"] // (8 * vmax)), -(-frame["w"] // (8 * hmax))
+
+
+def _alloc_coef_store(frame: dict) -> dict[int, np.ndarray]:
+    """Per-component (blocks_y, blocks_x, 64) int32 in ZIGZAG order,
+    MCU-padded so interleaved scans cover the full grid."""
+    _hmax, _vmax, mcus_y, mcus_x = _mcu_grid(frame)
     return {
         c["id"]: np.zeros((mcus_y * c["v"], mcus_x * c["h"], 64), np.int32)
-        for c in comps
+        for c in frame["comps"]
     }
 
 
-def _comp_blocks(frame: dict, c: dict) -> tuple[int, int]:
-    """Non-interleaved block-grid dims for one component (T.81 A.2.2:
-    ceil of the sampling-scaled pixel dims over 8)."""
-    comps = frame["comps"]
-    hmax = max(x["h"] for x in comps)
-    vmax = max(x["v"] for x in comps)
-    pw = -(-frame["w"] * c["h"] // hmax)
-    ph = -(-frame["h"] * c["v"] // vmax)
-    return -(-ph // 8), -(-pw // 8)
+def _scan_walk(frame: dict, scan: list, restart_interval: int) -> list:
+    """The data units of one DCT scan in decode order (T.81 A.2), split
+    into restart intervals: a list with one iterator per interval, each
+    yielding (scan slot, offset) pairs once, `offset` being the index of
+    the block's DC coefficient in that component's coefficient store
+    viewed flat (block index · 64). Interleaved scans
+    (Ns > 1) walk the MCU-padded grid, each MCU holding h×v blocks of
+    every scan component in scan order. An Ns = 1 scan is
+    non-interleaved: a block raster over the component's own grid
+    (ceil of its sampling-scaled dims over 8), one block per MCU, so
+    restart intervals then count single blocks. Every scan kind,
+    Huffman or arithmetic, sequential or progressive, walks this order
+    and supplies only its entropy decoding."""
+    hmax, vmax, mcus_y, mcus_x = _mcu_grid(frame)
+    if len(scan) > 1:
+        grid_y, grid_x = mcus_y, mcus_x
+        mcu = [(c["v"], c["h"]) for c, _td, _ta in scan]
+    else:
+        comp = scan[0][0]
+        grid_y = -(-frame["h"] * comp["v"] // (8 * vmax))
+        grid_x = -(-frame["w"] * comp["h"] // (8 * hmax))
+        mcu = [(1, 1)]
+    cols = []
+    for (comp, _td, _ta), (v, h) in zip(scan, mcu):
+        row = np.arange(grid_y)[:, None, None, None] * v + np.arange(v)[:, None]
+        col = np.arange(grid_x)[:, None, None] * h + np.arange(h)
+        # the store is MCU-padded: its rows are mcus_x·h blocks wide
+        cols.append((row * (mcus_x * comp["h"]) + col).reshape(-1, v * h))
+    offsets = np.concatenate(cols, axis=1) * 64
+    slots = [j for j, (v, h) in enumerate(mcu) for _ in range(v * h)]
+    step = restart_interval or len(offsets)
+    return [
+        zip(slots * len(part), part.ravel().tolist())
+        for part in (offsets[i : i + step] for i in range(0, len(offsets), step))
+    ]
 
 
-def _dc_prog(r: _BitReader, blk: np.ndarray, htab, ah: int, al: int, pred: dict, cid: int) -> None:
+def _dc_prog(r: _BitReader, blk: np.ndarray, htab, ah: int, al: int, pred: list, slot: int) -> None:
     if ah == 0:  # first DC scan: diff-coded point-transformed DC
         t = _huff_decode(r, htab)
         diff = _extend(r.bits(t), t) if t else 0
-        pred[cid] += diff
-        blk[0] = pred[cid] << al
+        pred[slot] += diff
+        blk[0] = pred[slot] << al
     elif r.bit():  # refinement: one bit, OR into position Al
         blk[0] |= 1 << al
 
@@ -1247,70 +1224,38 @@ def _ac_refine(r: _BitReader, blk: np.ndarray, htab, ss: int, se: int, al: int, 
     return eobrun
 
 
-def _progressive_scan(data, pos, frame, scan, htables, restart_interval,
-                      ss, se, ah, al, store) -> None:
-    comps = frame["comps"]
-    r = _BitReader(data, pos)
-    pred = {c["id"]: 0 for c in comps}
+def _progressive_scan(data, pos, frame, scan, walk, htables, spectral, store) -> None:
+    """One SOF2/SOF6 scan accumulated into the coefficient store in the
+    data-unit order of `walk` (_scan_walk): a DC scan, first or
+    refinement, interleaved or not, or one component's AC band."""
+    ss, se, ah, al = spectral
+    if ss == 0:
+        if se != 0:
+            raise NotImplementedError("JPEG: DC scan with Se != 0")
+        tabs = [htables.get((0, td)) for _c, td, _ta in scan]
+    else:  # AC scan: always single-component
+        if len(scan) != 1:
+            raise NotImplementedError("JPEG: interleaved AC scan")
+        htab = htables[(1, scan[0][2])]
+        dec = _ac_first if ah == 0 else _ac_refine
+    flats = [store[c["id"]].reshape(-1) for c, _td, _ta in scan]
     # differential frames: DC coded directly (PRED = 0) — zeroing the
     # predictor after every block makes _dc_prog store the raw value
     diff_frame = bool(frame.get("differential"))
-    eobrun = 0
-    unit = 0  # restart counting: MCUs (interleaved) or blocks
-
-    def maybe_restart():
-        nonlocal pred, eobrun
-        if restart_interval and unit and unit % restart_interval == 0:
+    r = _BitReader(data, pos)
+    for i, interval in enumerate(walk):
+        if i:
             r.restart()
-            pred = {c["id"]: 0 for c in comps}
-            eobrun = 0
-
-    if ss == 0:  # DC scan
-        if se != 0:
-            raise NotImplementedError("JPEG: DC scan with Se != 0")
-        if len(scan) > 1:  # interleaved, MCU order
-            hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
-            mcus_x = -(-frame["w"] // (8 * hmax))
-            mcus_y = -(-frame["h"] // (8 * vmax))
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    maybe_restart()
-                    for comp, td, _ta in scan:
-                        cid = comp["id"]
-                        for by in range(comp["v"]):
-                            for bx in range(comp["h"]):
-                                blk = store[cid][my * comp["v"] + by, mx * comp["h"] + bx]
-                                _dc_prog(r, blk, htables.get((0, td)), ah, al, pred, cid)
-                                if diff_frame:
-                                    pred[cid] = 0
-                    unit += 1
-        else:
-            comp, td, _ta = scan[0]
-            bh, bw = _comp_blocks(frame, comp)
-            for by in range(bh):
-                for bx in range(bw):
-                    maybe_restart()
-                    _dc_prog(r, store[comp["id"]][by, bx], htables.get((0, td)),
-                             ah, al, pred, comp["id"])
-                    if diff_frame:
-                        pred[comp["id"]] = 0
-                    unit += 1
-        return
-
-    # AC scan: always single-component, block-raster over its own grid
-    if len(scan) != 1:
-        raise NotImplementedError("JPEG: interleaved AC scan")
-    comp, _td, ta = scan[0]
-    htab = htables[(1, ta)]
-    arr = store[comp["id"]]
-    bh, bw = _comp_blocks(frame, comp)
-    dec = _ac_first if ah == 0 else _ac_refine
-    for by in range(bh):
-        for bx in range(bw):
-            maybe_restart()
-            eobrun = dec(r, arr[by, bx], htab, ss, se, al, eobrun)
-            unit += 1
+        pred = [0] * len(scan)
+        eobrun = 0
+        for slot, off in interval:
+            blk = flats[slot][off : off + 64]
+            if ss:
+                eobrun = dec(r, blk, htab, ss, se, al, eobrun)
+                continue
+            _dc_prog(r, blk, tabs[slot], ah, al, pred, slot)
+            if diff_frame:
+                pred[slot] = 0
 
 
 def _progressive_planes(frame, qtables, store) -> dict:

@@ -103,6 +103,13 @@ def _luma(r: np.ndarray, g: np.ndarray, b: np.ndarray) -> np.ndarray:
     ).astype(np.uint8)
 
 
+def _gray(px: np.ndarray) -> np.ndarray:
+    """A decoded page as grayscale: RGB folds to luma, gray passes."""
+    if px.ndim == 3:
+        return _luma(px[:, :, 0], px[:, :, 1], px[:, :, 2])
+    return px
+
+
 def _decode_pnm(data: bytes) -> np.ndarray:
     """PGM P2/P5 and PPM P6 parser (netpbm spec): magic, whitespace/
     comment-separated header tokens (width, height, maxval), then ascii
@@ -834,10 +841,7 @@ def decode_bytes(data: bytes) -> list[np.ndarray]:
     if data[:2] == b"\xff\xd8":
         from openocr_spark.kernels.jpeg_format import decode_jpeg
 
-        px = decode_jpeg(data)
-        if px.ndim == 3:
-            px = _luma(px[:, :, 0], px[:, :, 1], px[:, :, 2])
-        return [px]
+        return [_gray(decode_jpeg(data))]
     if data[:2] in (b"PF", b"Pf") and data[2:3].isspace():
         return [_decode_pfm(data)]
     if data[:4] == b"\x59\xa6\x6a\x95":
@@ -847,10 +851,7 @@ def decode_bytes(data: bytes) -> list[np.ndarray]:
     if data[:4] == b"\x76\x2f\x31\x01":
         from openocr_spark.kernels.exr_format import decode_exr
 
-        px = decode_exr(data)
-        if px.ndim == 3:
-            px = _luma(px[:, :, 0], px[:, :, 1], px[:, :, 2])
-        return [px]
+        return [_gray(decode_exr(data))]
     if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
         from openocr_spark.kernels.riff_media import decode_avi_frames
 
@@ -863,19 +864,11 @@ def decode_bytes(data: bytes) -> list[np.ndarray]:
     if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
         from openocr_spark.kernels.webp_format import decode_webp
 
-        px = decode_webp(data)
-        if px.ndim == 3:
-            px = _luma(px[:, :, 0], px[:, :, 1], px[:, :, 2])
-        return [px]
+        return [_gray(decode_webp(data))]
     if data[:4] in (b"II*\x00", b"MM\x00*"):
         from openocr_spark.kernels.tiff_format import decode_tiff
 
-        pages = []
-        for px in decode_tiff(data):
-            if px.ndim == 3:
-                px = _luma(px[:, :, 0], px[:, :, 1], px[:, :, 2])
-            pages.append(px)
-        return pages
+        return [_gray(px) for px in decode_tiff(data)]
     if data[:4] in (b"\x28\x00\x00\x00", b"\x6c\x00\x00\x00", b"\x7c\x00\x00\x00"):
         # headerless DIB (.dib — the BITMAPINFO/V4/V5 header with no BM
         # file header, as cv2.imread accepts): synthesize the 14-byte

@@ -286,7 +286,7 @@ def _walk_pages(objects: dict[int, object], node, out: list,
 
 def _decode_image_xobject(objects: dict[int, object], obj) -> np.ndarray:
     """Inflate + unpredict one /Subtype /Image XObject to 8-bit gray."""
-    from openocr_spark.kernels.media_decode import _luma, _png_unfilter
+    from openocr_spark.kernels.media_decode import _gray, _luma, _png_unfilter
 
     d, raw = obj
     w = _resolve(objects, d.get("/Width"))
@@ -321,9 +321,7 @@ def _decode_image_xobject(objects: dict[int, object], obj) -> np.ndarray:
             raise NotImplementedError(
                 f"PDF /DCTDecode dims {ph}x{pw} != XObject /Height//Width {h}x{w}"
             )
-        if px.ndim == 3:
-            return _luma(px[:, :, 0], px[:, :, 1], px[:, :, 2])
-        return px
+        return _gray(px)
     if filt not in (None, "/FlateDecode"):
         raise NotImplementedError(f"PDF image filter {filt} not supported")
     if bpc != 8 or cs not in ("/DeviceGray", "/DeviceRGB"):

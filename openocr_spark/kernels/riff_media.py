@@ -35,7 +35,7 @@ import struct
 
 import numpy as np
 
-from openocr_spark.kernels.media_decode import MAX_DECODE_SAMPLES, check_dims
+from openocr_spark.kernels.media_decode import MAX_DECODE_SAMPLES, _gray, check_dims
 
 # an MJPEG frame below ~64 bytes is not a legal JPEG; bounds the frame
 # count a corrupt header can claim against the actual payload size
@@ -231,11 +231,7 @@ def decode_avi_frames(data: bytes, every_n: int = 1) -> list[np.ndarray]:
                 "AVI stream codec is not MJPEG — compressed video codecs "
                 "(H.264/VP9/...) are a documented fail-loud boundary"
             )
-        px = decode_jpeg(payload)
-        if px.ndim == 3:
-            from openocr_spark.kernels.media_decode import _luma
-
-            px = _luma(px[:, :, 0], px[:, :, 1], px[:, :, 2])
+        px = _gray(decode_jpeg(payload))
         check_dims(px.shape[1], px.shape[0], "AVI MJPEG frame")
         total += px.shape[0] * px.shape[1]
         if total > MAX_DECODE_SAMPLES:

@@ -29,9 +29,17 @@ def _img() -> np.ndarray:
 def _streams() -> dict[str, bytes]:
     import struct
 
-    from jpeg_arith_ref_encoder import encode_jpeg_arith
+    from jpeg_arith_ref_encoder import (
+        encode_jpeg_arith,
+        encode_jpeg_arith_lossless,
+        encode_jpeg_arith_progressive,
+    )
     from jpeg_hier_ref_encoder import encode_jpeg_hierarchical
-    from jpeg_ref_encoder import encode_jpeg, encode_jpeg_lossless
+    from jpeg_ref_encoder import (
+        encode_jpeg,
+        encode_jpeg_lossless,
+        encode_jpeg_progressive,
+    )
     from tiff_ref_encoder import write_tiff
     from webp_ref_encoder import encode_vp8l
 
@@ -133,6 +141,17 @@ def _streams() -> dict[str, bytes]:
     out["vp8l_palette"] = encode_vp8l((img >> 4) << 4, palette=True, lz77=True)
     color = np.dstack([img, img[::-1], np.roll(img, 5, axis=1)])
     out["jpeg_restart"] = encode_jpeg(color, subsample=True, restart_interval=2)
+    # every JPEG scan walk: progressive Huffman (restart intervals, EOB
+    # runs across blocks), progressive and lossless arithmetic
+    out["jpeg_progressive"] = encode_jpeg_progressive(
+        color, subsample=True, restart_interval=2
+    )
+    out["jpeg_arith_progressive"] = encode_jpeg_arith_progressive(
+        color, subsample=True
+    )
+    out["jpeg_arith_lossless"] = encode_jpeg_arith_lossless(
+        img, predictor=4, restart_interval=5
+    )
 
     out["tiff_lzw"] = write_tiff(
         [{"pixels": img, "compression": 5, "predictor": 2}]

@@ -1891,12 +1891,102 @@ def test_jpeg_arith_noninterleaved_sequential_scans():
             assert np.array_equal(a, b), (subsample, ri)
 
 
+def _edit_sos(data: bytes, nth: int, edit) -> bytes:
+    """`data` with the body of its `nth` SOS segment replaced by
+    `edit(body)` (the segment length follows the new body)."""
+    pos, seen = 2, 0
+    while True:
+        marker = data[pos + 1]
+        (seglen,) = struct.unpack_from(">H", data, pos + 2)
+        if marker == 0xDA:
+            if seen == nth:
+                body = edit(bytearray(data[pos + 4 : pos + 2 + seglen]))
+                return (data[: pos + 2] + struct.pack(">H", len(body) + 2)
+                        + bytes(body) + data[pos + 2 + seglen :])
+            seen += 1
+            pos = data.index(b"\xff", pos + 2 + seglen)
+            while data[pos + 1] in (0x00, *range(0xD0, 0xD8)):
+                pos = data.index(b"\xff", pos + 2)
+        else:
+            pos += 2 + seglen
+
+
+def _set(i: int, v: int):
+    def edit(body: bytearray) -> bytearray:
+        body[i] = v
+        return body
+    return edit
+
+
+@pytest.mark.parametrize("mode", ["sequential", "progressive"])
+@pytest.mark.parametrize("edit, prog_scan, msg", [
+    (_set(1, 9), 0, "component"),     # Cs names no frame component
+    (_set(2, 0x30), 0, "table"),      # Td = 3: no such DC table
+    (_set(2, 0x03), 1, "table"),      # Ta = 3: no such AC table
+], ids=["unknown_component", "missing_dc_table", "missing_ac_table"])
+def test_jpeg_malformed_scan_header_raises_not_implemented(
+    mode, edit, prog_scan, msg
+):
+    """A scan header naming an unknown component or an undefined
+    Huffman table is a malformed stream: it raises NotImplementedError
+    (the contract PDF pages rely on to skip one bad image), never
+    StopIteration, KeyError or AttributeError. In the progressive
+    stream scan 0 is the DC scan (it reads no AC table) and scan 1 an
+    AC band."""
+    from jpeg_ref_encoder import encode_jpeg, encode_jpeg_progressive
+    from openocr_spark.kernels.jpeg_format import decode_jpeg
+
+    gray = _smooth(16, 24)
+    if mode == "sequential":
+        data = _edit_sos(encode_jpeg(gray), 0, edit)
+    else:
+        data = _edit_sos(encode_jpeg_progressive(gray), prog_scan, edit)
+    with pytest.raises(NotImplementedError, match=msg):
+        decode_jpeg(data)
+
+
+def _repeat_component(body: bytearray) -> bytearray:
+    """Ns=1 scan header → Ns=2 listing its component twice."""
+    return bytearray([2]) + body[1:3] + body[1:3] + body[3:]
+
+
+@pytest.mark.parametrize("mode", ["arith", "progressive", "arith_progressive"])
+def test_jpeg_scan_repeating_a_component_raises(mode):
+    """A scan that lists one component twice is malformed in every
+    coding mode (the Huffman sequential scan always rejected it; the
+    arithmetic one decoded it to wrong pixels)."""
+    from jpeg_arith_ref_encoder import (
+        encode_jpeg_arith,
+        encode_jpeg_arith_progressive,
+    )
+    from jpeg_ref_encoder import encode_jpeg_progressive
+    from openocr_spark.kernels.jpeg_format import decode_jpeg
+
+    enc = {"arith": encode_jpeg_arith, "progressive": encode_jpeg_progressive,
+           "arith_progressive": encode_jpeg_arith_progressive}[mode]
+    data = _edit_sos(enc(_smooth(16, 24)), 0, _repeat_component)
+    with pytest.raises(NotImplementedError, match="repeated"):
+        decode_jpeg(data)
+
+
 def _pin_streams() -> dict:
     """Name → (decoder, stream) for the entropy-decoder digest pins.
-    JPEG streams use the Annex K tables (long AC codes), VP8L streams
-    mix literals, backrefs and color-cache hits."""
+    JPEG streams use the Annex K tables (long AC codes) or the QM coder
+    with non-default DAC conditioning, and cover every scan walk:
+    interleaved and single-component, sequential, progressive and
+    lossless, restart intervals, hierarchical differential frames.
+    VP8L streams mix literals, backrefs and color-cache hits."""
+    from jpeg_arith_ref_encoder import (
+        encode_jpeg_arith,
+        encode_jpeg_arith_lossless,
+        encode_jpeg_arith_progressive,
+    )
     from jpeg_hier_ref_encoder import encode_jpeg_hierarchical
-    from jpeg_ref_encoder import encode_jpeg
+    from jpeg_ref_encoder import (
+        encode_jpeg,
+        encode_jpeg_lossless,
+        encode_jpeg_progressive,
+    )
     from tiff_ref_encoder import write_tiff
     from webp_ref_encoder import encode_vp8l
     from openocr_spark.kernels.jpeg_format import decode_jpeg
@@ -1914,7 +2004,41 @@ def _pin_streams() -> dict:
     groups = (np.indices((mh, mw)).sum(axis=0) % 3).astype(np.int64)
     base = encode_jpeg(gray)
     vp8l = encode_vp8l(rgb, subtract_green=True, lz77=True, cache_bits=6)
+    arith = encode_jpeg_arith(rgb, subsample=True, restart_interval=3,
+                              dc_cond=(1, 4), kx=2)
+    arith_plain = encode_jpeg_arith(rgb, subsample=True, dc_cond=(1, 4), kx=2)
+    img16 = (gray.astype(np.uint16) << 8) | rng.integers(
+        0, 256, gray.shape, dtype=np.uint16)
     return {
+        "jpeg_arith_420": (decode_jpeg, arith),
+        "jpeg_arith_noninterleaved": (decode_jpeg, encode_jpeg_arith(
+            rgb, subsample=True, noninterleaved=True, restart_interval=4,
+            dc_cond=(1, 4), kx=2)),
+        "jpeg_arith_progressive": (decode_jpeg, encode_jpeg_arith_progressive(
+            rgb, subsample=True, dc_cond=(1, 3), kx=3)),
+        "jpeg_arith_lossless": (decode_jpeg, encode_jpeg_arith_lossless(
+            rgb, predictor=5, restart_interval=7, dc_cond=(1, 3))),
+        "jpeg_arith_lossless16": (decode_jpeg, encode_jpeg_arith_lossless(
+            img16, predictor=7, prec=16)),
+        "jpeg_arith_truncated": (decode_jpeg, arith_plain[
+            : len(arith_plain) * 2 // 3]),
+        "jpeg_progressive": (decode_jpeg, encode_jpeg_progressive(
+            rgb, subsample=True, restart_interval=2)),
+        "jpeg_lossless": (decode_jpeg, encode_jpeg_lossless(
+            rgb, predictor=6, restart_interval=9, multi_scan=True)),
+        "jpeg_hier_progressive": (decode_jpeg, encode_jpeg_hierarchical(
+            gray, [{"kind": "prog"}, {"kind": "prog", "exp": (1, 1)}])),
+        # the test encoder writes restart markers (and DRI) only in
+        # sequential and lossless frames, so the interval is set where
+        # no progressive frame follows
+        "jpeg_hier_arith_dct": (decode_jpeg, encode_jpeg_hierarchical(
+            gray, [{"kind": "arith-prog"},
+                   {"kind": "arith-prog", "exp": (1, 1)},
+                   {"kind": "arith-dct"}], restart_interval=3)),
+        "jpeg_hier_arith_lossless": (decode_jpeg, encode_jpeg_hierarchical(
+            gray, [{"kind": "arith-lossless"},
+                   {"kind": "arith-lossless", "exp": (1, 1)}],
+            restart_interval=5)),
         "jpeg_gray": (decode_jpeg, base),
         "jpeg_420": (decode_jpeg, encode_jpeg(rgb, subsample=True)),
         "jpeg_noninterleaved": (decode_jpeg, encode_jpeg(
@@ -1941,9 +2065,20 @@ def _pin_streams() -> dict:
 _PIN_DIGESTS = {
     "dct_pdf": "76ce279d3cc694b1bede50f521ed8e8f",
     "jpeg_420": "0b07df1f1729a7c88c94b84eccfee0f7",
+    "jpeg_arith_420": "0b07df1f1729a7c88c94b84eccfee0f7",
+    "jpeg_arith_lossless": "2ce17d26cad7736343efa1bc696c7d13",
+    "jpeg_arith_lossless16": "2d3c9446d7b35f51282cb3e44e89bcea",
+    "jpeg_arith_noninterleaved": "0b07df1f1729a7c88c94b84eccfee0f7",
+    "jpeg_arith_progressive": "0b07df1f1729a7c88c94b84eccfee0f7",
+    "jpeg_arith_truncated": "ed9c49f4ffe4198b06c1d1fcb89560b8",
     "jpeg_gray": "76ce279d3cc694b1bede50f521ed8e8f",
     "jpeg_hier": "a7afea2b367fec0ac1152c0015676d75",
+    "jpeg_hier_arith_dct": "502a0821dbb1794f9938cb91bb6ea718",
+    "jpeg_hier_arith_lossless": "2d3c9446d7b35f51282cb3e44e89bcea",
+    "jpeg_hier_progressive": "a7afea2b367fec0ac1152c0015676d75",
+    "jpeg_lossless": "2ce17d26cad7736343efa1bc696c7d13",
     "jpeg_noninterleaved": "0b07df1f1729a7c88c94b84eccfee0f7",
+    "jpeg_progressive": "0b07df1f1729a7c88c94b84eccfee0f7",
     "jpeg_restart": "3f6b2d5a96446487e1a2874a7625db6c",
     "jpeg_sof1": "76ce279d3cc694b1bede50f521ed8e8f",
     "jpeg_truncated": "2e4312c272f10ed3b9a8c0b3230f938d",
@@ -1958,8 +2093,8 @@ _PIN_DIGESTS = {
 @pytest.mark.parametrize("name", sorted(_PIN_DIGESTS))
 def test_entropy_decoders_pinned_pixels(name):
     """md5 of the decoded pixels (shape, dtype and bytes of every page)
-    for the Huffman- and VP8L-coded containers, recorded before the
-    entropy loops were rewritten. decode_mix compares Spark against
+    for the Huffman-, QM- and VP8L-coded containers, recorded before
+    the entropy loops and the JPEG scan walk were rewritten. decode_mix compares Spark against
     this package's own decode_bytes, so only these pins see a codec
     change that both paths share."""
     import hashlib
